@@ -117,7 +117,7 @@ def connected_components(
     # big side) twice per round. The node count is measured once
     # (node count only shrinks in no iteration — the label table keys
     # stay the full node set), and below the established
-    # SPARK_GRAFT_STATE_BCAST_ROWS cap every per-round join broadcasts
+    # lanes.cap("state_bcast_rows") every per-round join broadcasts
     # the label side instead: edges are never re-shuffled. A graph
     # whose node state exceeds the cap keeps the shuffle joins —
     # same results. Lineage stays truncated EVERY round (not the

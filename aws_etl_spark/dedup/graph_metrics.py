@@ -228,8 +228,7 @@ def label_propagation(
     is truncated each round (localCheckpoint) per iterative-operator
     hygiene.
     """
-    import os
-
+    from aws_etl_spark.ops import lanes
     from aws_etl_spark.ops.scale import broadcast_if_bounded
 
     edges = _canonical(pairs, src, dst)
@@ -239,9 +238,7 @@ def label_propagation(
     # max(count, -label) tiebreak replay bit-exactly on the collected
     # symmetric edge list. Above the dial the distributed loop below
     # runs unchanged.
-    driver_cap = int(
-        os.environ.get("SPARK_GRAFT_LPA_DRIVER_EDGES", "2000000")
-    )
+    driver_cap = lanes.cap("lpa_edges")
     if sym.count() <= driver_cap:
         from aws_etl_spark.ops.scale import bounded_rows_df
         from pyspark.sql import types as T
@@ -313,8 +310,7 @@ def k_core_membership(
     iterative shape as star-contraction CC). ``degree`` is the
     original degree; ``in_core`` marks round-``n_rounds`` survivors.
     """
-    import os
-
+    from aws_etl_spark.ops import lanes
     from aws_etl_spark.ops.scale import broadcast_if_bounded
 
     edges0 = _canonical(pairs, src, dst).localCheckpoint(eager=True)
@@ -325,9 +321,7 @@ def k_core_membership(
     # list instead of ~4 driver-coordinated jobs per round. Above the
     # dial the distributed loop below runs unchanged. Forced-path
     # equivalence pinned in tests/test_r13_fastpaths.py.
-    driver_cap = int(
-        os.environ.get("SPARK_GRAFT_KCORE_DRIVER_EDGES", "2000000")
-    )
+    driver_cap = lanes.cap("kcore_edges")
     if edges0.count() <= driver_cap:
         from aws_etl_spark.ops.scale import bounded_rows_df
         from pyspark.sql import types as T

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aws_etl_spark.ops import lanes
+
 DAMPING = 0.85
 N_ITER = 10
 
@@ -84,7 +86,7 @@ def pagerank(
     # query's declared contract is the 1e-6-relative agreement with an
     # exact power iteration pinned in tests/test_dedup.py (rows-only,
     # no hash oracle), and the replay sits far inside it.
-    cap = _driver_edge_cap()
+    cap = lanes.cap("pagerank_edges")
     if cap > 0 and edges.count() <= cap:
         import numpy as np
 
@@ -176,21 +178,6 @@ def pagerank(
 Q_SCALE = 10**12
 
 
-def _driver_edge_cap() -> int:
-    """Edge-count dial for the driver fast path of the QUANTIZED
-    variant (round-13 optimization, the events_markov_stationary
-    treatment): below it the bounded-state power iteration runs as
-    exact int64 numpy on the collected edge list instead of
-    2 joins + 1 agg Spark jobs PER ROUND. 2M edges ≈ 50 MB collected —
-    far under the driver headroom; above the dial the distributed
-    loop is unchanged, so a graph that outgrows the driver keeps the
-    scale-out plan. 0 disables (the equivalence tests force both
-    paths)."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_PAGERANK_DRIVER_EDGES", "2000000"))
-
-
 def _pagerank_quantized_driver(
     edges: DataFrame,
     degrees: DataFrame,
@@ -269,7 +256,7 @@ def pagerank_quantized(
     # node and the arithmetic is exact — below the edge dial the
     # 2-jobs-per-round loop collapses to a driver numpy replay
     # (~20 AQE round-trips removed); above it nothing changes
-    cap = _driver_edge_cap()
+    cap = lanes.cap("pagerank_edges")
     if cap > 0 and edges.count() <= cap:
         return _pagerank_quantized_driver(edges, degrees, damping_pct, n_iter)
     b = broadcast_if_bounded(n_nodes)

@@ -34,7 +34,8 @@ iterations).
 Storage lives in a per-process temp dir removed at interpreter exit.
 ``SPARK_GRAFT_NO_PAIR_CACHE=1`` disables the cache (checked per call —
 the plan-structure tests use it so they measure the pipeline, not a
-parquet scan).
+parquet scan). The same switch turns off :func:`memo`, the in-memory
+twin for trained state and probe results, and the lakehouse memo.
 
 Scratch location (round-14, r13 verdict item 3): the default local
 tmpdir is only correct when executors share the driver's filesystem
@@ -59,15 +60,25 @@ import shutil
 import tempfile
 import threading
 from collections.abc import Callable
+from typing import TypeVar
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
+
+_T = TypeVar("_T")
 
 _DIR: str | None = None
 _LOCK = threading.Lock()  # guards _DIR init and the key-lock map only
 _KEY_LOCKS: dict[str, threading.Lock] = {}
 _REMOTE_ROOT: str | None = None
 _REMOTE_SPARK = None  # session used for exit-time cleanup
+_MEMO: dict = {}  # (session identity, fingerprint) -> memo() result
+
+
+def disabled() -> bool:
+    """True when ``SPARK_GRAFT_NO_PAIR_CACHE=1`` turns the process
+    caches off (the pair cache, :func:`memo`, the lakehouse memo)."""
+    return os.environ.get("SPARK_GRAFT_NO_PAIR_CACHE", "") == "1"
 
 
 def _cache_dir() -> str:
@@ -192,7 +203,7 @@ def materialized(
     different lazy shape for the uncached path (e.g. the historical
     single-consumer pipeline a plan test pins) while the cached path
     builds a shareable artifact."""
-    if os.environ.get("SPARK_GRAFT_NO_PAIR_CACHE", "") == "1":
+    if disabled():
         return (fallback or build)()
     key = _fingerprint(tag, df, params)
     if key is None:
@@ -211,8 +222,14 @@ def materialized(
                 build().write.mode("overwrite").parquet(tmp)
                 _, jtmp = _hadoop_fs(spark, tmp)
                 if not fs.rename(jtmp, jfinal):
-                    # lost a cross-process race for the same key —
-                    # the winner's artifact is equivalent by keying
+                    # a lost cross-process race for the same key leaves
+                    # the winner's equivalent artifact in place; any
+                    # other failure must not pass as a cache hit
+                    if not fs.exists(jfinal):
+                        raise RuntimeError(
+                            f"pair cache: rename {tmp} -> {path} failed "
+                            f"and {path} does not exist"
+                        )
                     fs.delete(jtmp, True)
         return spark.read.parquet(path)
     with _LOCK:
@@ -225,6 +242,34 @@ def materialized(
     return spark.read.parquet(path)
 
 
+def memo(
+    tag: str, df: DataFrame, params: dict, build: Callable[[], _T]
+) -> _T:
+    """Return ``build()``'s result, computed once per process for this
+    (session, tag, params, input) and held in memory for later calls.
+
+    The session identity is part of the key because results may be
+    session-owned checkpointed DataFrames. ``build()`` runs uncached
+    when the cache is disabled, the input has no stable fingerprint,
+    or the session cannot be identified. Same-key callers wait on one
+    build; a fresh process starts cold, so results are unchanged."""
+    if disabled():
+        return build()
+    fp = _fingerprint(tag, df, params)
+    try:
+        spark = df.sparkSession
+        sid = (spark.sparkContext.applicationId, id(spark))
+    except Exception:
+        sid = None
+    if fp is None or sid is None:
+        return build()
+    key = (sid, fp)
+    with _key_lock(fp):
+        if key not in _MEMO:
+            _MEMO[key] = build()
+        return _MEMO[key]
+
+
 def cache_active(df: DataFrame) -> bool:
     """True when :func:`materialized` would actually serve from the
     cache for this input (enabled via env AND the input has a stable
@@ -232,6 +277,6 @@ def cache_active(df: DataFrame) -> bool:
     artifact derivation (cached) and its historical single-consumer
     pipeline (uncached — the shape plan tests pin) without a
     fallback thunk."""
-    if os.environ.get("SPARK_GRAFT_NO_PAIR_CACHE", "") == "1":
+    if disabled():
         return False
     return _fingerprint("probe", df, {}) is not None

@@ -188,16 +188,16 @@ def broadcast_if_bounded(n_rows: int, cap: int | None = None):
     say so" — instead of trusting estimates that cannot exist.
 
     Returns ``F.broadcast`` when ``0 <= n_rows <= cap``, else the
-    identity. ``cap`` defaults to ``$SPARK_GRAFT_STATE_BCAST_ROWS``
+    identity. ``cap`` defaults to ``lanes.cap("state_bcast_rows")``
     (2,000,000 — ~50 MB of (long, long, long) state rows framed,
     well under the executor-memory cost ceiling of a broadcast
     relation; a 100 TB dup graph whose node state exceeds the cap
     keeps today's shuffle joins, same results).
     """
-    import os
+    from aws_etl_spark.ops import lanes
 
     if cap is None:
-        cap = int(os.environ.get("SPARK_GRAFT_STATE_BCAST_ROWS", "2000000"))
+        cap = lanes.cap("state_bcast_rows")
     if 0 <= n_rows <= cap:
         return F.broadcast
     return lambda df: df

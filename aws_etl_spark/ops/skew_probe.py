@@ -11,44 +11,37 @@ there but cost ~1.8x on uniform data (the extra chunk-stitch pass).
 Neither form dominates, so the right form is a DATA property — this
 probe measures it: one map-side-combined count of the hottest key's
 row share (the ``ops/scale.py::hot_keys`` survey reduced to a single
-scalar), memoized per (input fingerprint, key) so one bench/driver
-process pays it once per corpus however many queries consult it.
+scalar), held in the process memo (``ops/pair_cache.py::memo``) so
+one bench/driver session pays it once per corpus however many
+queries consult it.
 
-``SPARK_GRAFT_SKEW_SHARE_PCT`` is the dial (default 20): a single key
-holding >= that percentage of rows routes the query to its chunked
-twin. 100 disables chunking outright; 0 forces it (the equivalence
-tests use both ends). ``SPARK_GRAFT_SKEW_MIN_ROWS`` (default
-1,000,000) is the engagement floor: below it the historical plan
-always runs — a "hot" key over a few thousand rows is not a
-straggler (one task finishes it in milliseconds), and tiny crafted
-corpora are trivially share-skewed (any 6-row fixture has a >=50%
-key), so a share test alone would silently reroute every
-edge-fixture differential. On the uniform bench corpus the probe
-always picks the historical plan, so declared results AND plans are
+``CHUNK_SHARE`` (0.20) is the dial: a single key holding at least
+that share of rows routes the query to its chunked twin. 1.0
+disables chunking outright; 0 forces it (the equivalence tests patch
+both ends). ``MIN_ROWS`` (1,000,000) is the engagement floor: below
+it the historical plan always runs — a "hot" key over a few thousand
+rows is not a straggler (one task finishes it in milliseconds), and
+tiny crafted corpora are trivially share-skewed (any 6-row fixture
+has a >=50% key), so a share test alone would silently reroute every
+edge-fixture differential. ``MIN_BYTES`` (64 MB) skips the probe job
+itself on small inputs. On the uniform bench corpus the probe always
+picks the historical plan, so declared results AND plans are
 unchanged there; the probe's own cost is the one counted aggregation.
 """
 
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_MEMO: dict[str, tuple[float, int]] = {}
-_LOCK = threading.Lock()
-
-
-def chunk_threshold() -> float:
-    """Hot-key row share above which the chunked form is chosen."""
-    return float(os.environ.get("SPARK_GRAFT_SKEW_SHARE_PCT", "20")) / 100.0
-
-
-def min_rows() -> int:
-    """Engagement floor: corpora below it never chunk (no straggler
-    can exist) and crafted edge fixtures keep the historical form."""
-    return int(os.environ.get("SPARK_GRAFT_SKEW_MIN_ROWS", "1000000"))
+CHUNK_SHARE = 0.20
+MIN_ROWS = 1_000_000
+# ≈ 2M event rows: below it the probe job itself is skipped — a pure
+# os.stat decision, so small corpora (every local bench/test scale)
+# pay nothing. A corpus this small cannot clear MIN_ROWS either.
+MIN_BYTES = 64 << 20
 
 
 def hot_key_share(df: DataFrame, key: str) -> tuple[float, int]:
@@ -57,36 +50,21 @@ def hot_key_share(df: DataFrame, key: str) -> tuple[float, int]:
     One groupBy count + one tiny agg — map-side combined, linear in
     the input, no join. Memoized on the pair-cache input fingerprint
     (canonicalized plan + file stats), so it re-runs when the data
-    changes and is free for the second consumer in a process.
+    changes and is free for the second consumer in a session.
     """
-    from aws_etl_spark.ops.pair_cache import _fingerprint
+    from aws_etl_spark.ops.pair_cache import memo
 
-    memo_key = _fingerprint(f"hot_key_share:{key}", df, {})
-    if memo_key is not None:
-        with _LOCK:
-            if memo_key in _MEMO:
-                return _MEMO[memo_key]
-    row = (
-        df.groupBy(key)
-        .count()
-        .agg(F.max("count").alias("mx"), F.sum("count").alias("tot"))
-        .collect()[0]
-    )
-    tot = int(row.tot or 0)
-    share = (float(row.mx) / tot, tot) if tot else (0.0, 0)
-    if memo_key is not None:
-        with _LOCK:
-            _MEMO[memo_key] = share
-    return share
+    def build() -> tuple[float, int]:
+        row = (
+            df.groupBy(key)
+            .count()
+            .agg(F.max("count").alias("mx"), F.sum("count").alias("tot"))
+            .collect()[0]
+        )
+        tot = int(row.tot or 0)
+        return (float(row.mx) / tot, tot) if tot else (0.0, 0)
 
-
-def min_bytes() -> int:
-    """Probe-engagement floor on INPUT FILE SIZE (default 64 MB ≈
-    2M event rows): below it the probe job itself is skipped — a
-    pure os.stat decision, so small corpora (every local bench/test
-    scale) pay literally nothing for the dial. A corpus too small to
-    clear this floor cannot clear the row floor either."""
-    return int(os.environ.get("SPARK_GRAFT_SKEW_MIN_BYTES", str(64 << 20)))
+    return memo(f"hot_key_share:{key}", df, {}, build)
 
 
 def _input_bytes(df: DataFrame) -> int | None:
@@ -114,13 +92,12 @@ def _input_bytes(df: DataFrame) -> int | None:
 
 def pick_chunked(df: DataFrame, key: str) -> bool:
     """True when the chunked (skew-splittable) twin should run."""
-    thr = chunk_threshold()
-    if thr <= 0.0:
+    if CHUNK_SHARE <= 0.0:
         return True
-    if thr >= 1.0:
+    if CHUNK_SHARE >= 1.0:
         return False
     size = _input_bytes(df)
-    if size is not None and size < min_bytes():
+    if size is not None and size < MIN_BYTES:
         return False  # no Spark job spent: nothing this small straggles
     share, tot = hot_key_share(df, key)
-    return tot >= min_rows() and share >= thr
+    return tot >= MIN_ROWS and share >= CHUNK_SHARE

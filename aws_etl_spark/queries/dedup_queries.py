@@ -766,11 +766,9 @@ def q_dedup_canonical_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 8 rounds replay bit-exactly on the collected directed edge
     # list (enc DIV 64 == Python // on non-negative ids). Above it
     # the distributed loop below runs unchanged.
-    import os
+    from aws_etl_spark.ops import lanes
 
-    driver_cap = int(
-        os.environ.get("SPARK_GRAFT_CANON_DRIVER_EDGES", "2000000")
-    )
+    driver_cap = lanes.cap("canon_edges")
     if edges.count() <= driver_cap:
         from aws_etl_spark.ops.scale import bounded_rows_df
 

@@ -59,8 +59,8 @@ def _lake_root(sf_dir: str) -> Path:
 # so a rewritten source or a vacuumed scratch dir rebuilds. The built
 # tables are plain files + JSON manifests — session-independent, and
 # every consumer is read-only (vacuum_plan plans, never deletes).
-# ``SPARK_GRAFT_NO_LAKE_CACHE=1`` disables (tests that mutate builder
-# internals use it).
+# ``SPARK_GRAFT_NO_PAIR_CACHE=1`` disables it with the other process
+# caches (``ops/pair_cache.py::disabled``).
 # --------------------------------------------------------------------------
 
 _BUILD_MEMO: dict = {}
@@ -77,7 +77,9 @@ def _lake_fingerprint(tag: str, sf_dir: str):
 
 
 def _memo_build(tag: str, sf_dir: str, build):
-    if os.environ.get("SPARK_GRAFT_NO_LAKE_CACHE"):
+    from aws_etl_spark.ops.pair_cache import disabled
+
+    if disabled():
         return build()
     key = _lake_fingerprint(tag, sf_dir)
     hit = _BUILD_MEMO.get(key)

@@ -272,10 +272,9 @@ def sql_query(
 # checkpoint (r12 ADVICE medium; no current query does this — the
 # fingerprint now makes the safety structural, not conventional).
 #
-# The cache is a bounded LRU (default 64 entries,
-# SPARK_GRAFT_STAGE_CACHE_CAP overrides): eviction — by capacity or
-# by supersession when the same (session, sql, chain, sf_dir) is
-# re-staged against a changed input snapshot — unpersists the
+# The cache is a bounded LRU of _STAGE_CACHE_CAP entries: eviction —
+# by capacity or by supersession when the same (session, sql, chain,
+# sf_dir) is re-staged against a changed input snapshot — unpersists the
 # checkpointed RDD's executor blocks immediately (r12 verdict item
 # 3). An evicted DataFrame's lineage is truncated by localCheckpoint,
 # so a consumer that held the final DataFrame of an earlier query
@@ -288,12 +287,7 @@ _STAGE_CACHE: "OrderedDict" = OrderedDict()
 _STAGE_CACHE_STATS = {"hits": 0, "misses": 0, "evictions": 0}
 # (session, sql, chain, sf_dir) -> full cache key, for supersession
 _STAGE_LATEST: dict = {}
-
-
-def _stage_cache_cap() -> int:
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_STAGE_CACHE_CAP", "64"))
+_STAGE_CACHE_CAP = 64
 
 
 def _unpersist_stage(df: DataFrame) -> None:
@@ -375,8 +369,7 @@ def _staged_view(
             _unpersist_stage(old)
     _STAGE_LATEST[base] = key
     _STAGE_CACHE[key] = df
-    cap = _stage_cache_cap()
-    while len(_STAGE_CACHE) > cap:
+    while len(_STAGE_CACHE) > _STAGE_CACHE_CAP:
         old_key, old_df = _STAGE_CACHE.popitem(last=False)
         _STAGE_LATEST.pop(old_key[:4], None)
         _STAGE_CACHE_STATS["evictions"] += 1
@@ -485,9 +478,8 @@ def staged_sql_query(
     checkpoint's blocks are freed immediately), a fresh process
     starts cold (the driver's per-query isolation is untouched), and
     ``SPARK_GRAFT_NO_STAGE_CACHE=1`` disables reuse entirely. The
-    cache is a bounded LRU (64 entries by default,
-    ``SPARK_GRAFT_STAGE_CACHE_CAP`` overrides); eviction unpersists
-    the checkpointed blocks, so a long-lived multi-corpus session is
+    cache is a bounded LRU of ``_STAGE_CACHE_CAP`` (64) entries;
+    eviction unpersists the checkpointed blocks, so a long-lived multi-corpus session is
     bounded in executor storage, and a consumer still holding a final
     DataFrame whose stage was evicted fails loudly rather than
     reading stale data. Guards and scalars still execute per

@@ -109,8 +109,8 @@ def q_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based (30 min) sessionization + per-session rollup.
 
     Round-14 (r13 verdict item 9): the skew probe picks the form —
-    a corpus whose hottest user holds >= SPARK_GRAFT_SKEW_SHARE_PCT
-    (default 20%) of events routes to the chunked twin
+    a corpus whose hottest user holds >= ``skew_probe.CHUNK_SHARE``
+    (20%) of events routes to the chunked twin
     (events_sessionization_chunked — shares this query's oracle
     verbatim, so the result is hash-identical by the driver's own
     proof); uniform corpora keep the historical single-window plan.

@@ -792,11 +792,9 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "event_type string, pi_micro bigint, pi double"
         )
-    import os
+    from aws_etl_spark.ops import lanes
 
-    driver_cap = int(
-        os.environ.get("SPARK_GRAFT_MARKOV_DRIVER_STATES", "512")
-    )
+    driver_cap = lanes.cap("markov_states")
     if n_states <= driver_cap:
         # Bounded-state fast path (round-13): the iteration state is
         # one integer per STATE and the transition table ≤ states²
@@ -2638,7 +2636,7 @@ def _register_markov_entropy() -> None:
     # Registered with an explicit body instead of the plain sql_query
     # helper so the round-14 skew probe (r13 verdict item 9) can pick
     # the form at call time: a corpus whose hottest user holds >=
-    # SPARK_GRAFT_SKEW_SHARE_PCT of events routes to the chunked twin
+    # skew_probe.CHUNK_SHARE of events routes to the chunked twin
     # (oracle shared verbatim — hash-identical by the driver's own
     # proof); uniform corpora run the historical single-window text
     # unchanged. PLAIN_SQL still carries the text for the rescan lint.

@@ -57,11 +57,9 @@ def kcenter_greedy_quantized(
     # product bound) instead of ~4 driver-coordinated jobs per round.
     # Non-uniform dim sets (a ragged vector) fall back to the
     # distributed loop, whose inner joins define that semantics.
-    import os
+    from aws_etl_spark.ops import lanes
 
-    driver_cap = int(
-        os.environ.get("SPARK_GRAFT_KCENTER_DRIVER_CELLS", "2000000")
-    )
+    driver_cap = lanes.cap("kcenter_cells")
     if ex.count() <= driver_cap:
         by_id: dict = {}
         for row in ex.collect():

@@ -85,11 +85,9 @@ def kmeans_quantized(
     # collected (id, dim, q) relation instead of ~5 driver-
     # coordinated jobs per round. Ragged dim sets fall back to the
     # distributed loop, whose joins define that semantics.
-    import os
+    from aws_etl_spark.ops import lanes
 
-    driver_cap = int(
-        os.environ.get("SPARK_GRAFT_KMEANS_DRIVER_CELLS", "2000000")
-    )
+    driver_cap = lanes.cap("kmeans_cells")
     if ex.count() <= driver_cap:
         by_id: dict = {}
         for row in ex.collect():

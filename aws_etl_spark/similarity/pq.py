@@ -49,17 +49,6 @@ def _sub_exploded(
     )
 
 
-# process-scoped trained-codebook memo (round-13; same discipline as
-# the spherical-k-means and BPE trainer memos): embeddings_pq_adc and
-# embeddings_pq_recall train byte-identical codebooks (integer-exact
-# Lloyd rounds, s DIV n) over the same exploded components — the
-# second consumer in a process reuses (ex, centroids, codes) instead
-# of re-running the explode + 2 Lloyd rounds + encode. Session
-# identity is part of the key (the cached values are session-owned
-# checkpointed DataFrames); SPARK_GRAFT_NO_PAIR_CACHE disables.
-_PQ_MEMO: dict = {}
-
-
 def _pq_trained(
     emb: DataFrame,
     id_col: str,
@@ -69,31 +58,29 @@ def _pq_trained(
     n_iter: int,
 ):
     """(ex, centroids, codes): exploded shifted components, trained
-    per-subspace codebooks, and the per-(id, sub) code assignment."""
-    import os
+    per-subspace codebooks, and the per-(id, sub) code assignment.
 
-    memo_key = None
-    if not os.environ.get("SPARK_GRAFT_NO_PAIR_CACHE"):
-        from aws_etl_spark.ops.pair_cache import _fingerprint
+    embeddings_pq_adc and embeddings_pq_recall train byte-identical
+    codebooks (integer-exact Lloyd rounds, s DIV n) over the same
+    exploded components, so the triple is held in the process memo
+    (``ops/pair_cache.py::memo``, keyed on session identity and the
+    input fingerprint): the second consumer in a session skips the
+    explode + Lloyd rounds + encode."""
+    from aws_etl_spark.ops.pair_cache import memo
 
-        fp = _fingerprint(
-            "pq_train",
-            emb,
-            {"id": id_col, "vec": vec_col, "m": m, "k": k, "iters": n_iter},
-        )
-        if fp is not None:
-            try:
-                sid = (
-                    emb.sparkSession.sparkContext.applicationId,
-                    id(emb.sparkSession),
-                )
-            except Exception:
-                sid = None
-            if sid is not None:
-                memo_key = (sid, fp)
-                hit = _PQ_MEMO.get(memo_key)
-                if hit is not None:
-                    return hit
+    return memo(
+        "pq_train",
+        emb,
+        {"id": id_col, "vec": vec_col, "m": m, "k": k, "iters": n_iter},
+        lambda: _pq_train(emb, id_col, vec_col, m, k, n_iter),
+    )
+
+
+def _pq_train(
+    emb: DataFrame, id_col: str, vec_col: str, m: int, k: int, n_iter: int
+):
+    from aws_etl_spark.ops import lanes
+
     d = emb.select(F.max(F.size(vec_col))).collect()[0][0]
     ex = _sub_exploded(emb, id_col, vec_col, m, d).localCheckpoint(eager=True)
 
@@ -109,15 +96,12 @@ def _pq_trained(
     # dropped by the left join), so ragged dim sets need no fallback.
     # The exploded relation itself stays a checkpointed DataFrame —
     # the downstream ADC/recall legs are data-sized and distributed.
-    driver_cap = int(os.environ.get("SPARK_GRAFT_PQ_DRIVER_CELLS", "2000000"))
+    driver_cap = lanes.cap("pq_cells")
     if driver_cap > 0 and ex.count() <= driver_cap:
         centroids_d, codes_d = _pq_lloyd_driver(
             emb.sparkSession, ex.collect(), k, n_iter
         )
-        out = (ex, centroids_d, codes_d)
-        if memo_key is not None:
-            _PQ_MEMO[memo_key] = out
-        return out
+        return (ex, centroids_d, codes_d)
 
     seeds = emb.select(F.col(id_col).alias("id")).orderBy("id").limit(k)
     centroids = (
@@ -171,10 +155,7 @@ def _pq_trained(
         )
 
     codes = assign(centroids).select("id", "sub", "cluster")
-    out = (ex, centroids, codes)
-    if memo_key is not None:
-        _PQ_MEMO[memo_key] = out
-    return out
+    return (ex, centroids, codes)
 
 
 

@@ -451,18 +451,6 @@ def nearest_centroids_udf(cents: list[tuple[int, list[float]]], n: int):
     return nearest
 
 
-# process-scoped trained-quantizer memo (round-13; the pair-cache
-# discipline applied to k-means TRAINING STATE): ann_cosine_topk_ivf
-# and dedup_semantic train byte-identical quantizers (same corpus,
-# same (k=16, iters=2, seed=42) params) — inside one process the
-# second consumer reuses the first's centroids instead of re-running
-# the sample + Lloyd jobs. Keyed on the pair-cache input fingerprint
-# (canonicalized plan + file list + (size, mtime_ns)), so a changed
-# corpus or different params retrain; a fresh process is cold and
-# bit-identical. SPARK_GRAFT_NO_PAIR_CACHE=1 disables.
-_TRAIN_MEMO: dict = {}
-
-
 def _lloyd_driver(
     rows, n_centroids: int, n_iters: int
 ) -> list[tuple[int, list[float]]]:
@@ -518,30 +506,40 @@ def _train_spherical_centroids(
     touched by the final assignment pass). Each iteration is one
     posexplode + map-side-combined groupBy over sample×dim rows; the
     (n_centroids × dim) sums are collected to the driver — tiny.
-    Empty clusters keep their previous centroid. Served from
-    ``_TRAIN_MEMO`` when the same (corpus, params) trained before in
-    this process.
+    Empty clusters keep their previous centroid.
+
+    ann_cosine_topk_ivf and dedup_semantic train byte-identical
+    quantizers (same corpus, same (k=16, iters=2, seed=42) params), so
+    the centroids are held in the process memo
+    (``ops/pair_cache.py::memo``): the second consumer in a session
+    reuses them instead of re-running the sample + Lloyd jobs. Callers
+    get their own copies of the centroid lists.
     """
-    import os
+    from aws_etl_spark.ops.pair_cache import memo
 
-    memo_key = None
-    if not os.environ.get("SPARK_GRAFT_NO_PAIR_CACHE"):
-        from aws_etl_spark.ops.pair_cache import _fingerprint
+    cents = memo(
+        "kmeans_train",
+        corpus,
+        {
+            "id": id_col,
+            "vec": vec_col,
+            "k": n_centroids,
+            "iters": n_iters,
+            "seed": seed,
+            "sample": train_sample,
+        },
+        lambda: _train_spherical_centroids_build(
+            corpus, id_col, vec_col, n_centroids, n_iters, seed, train_sample
+        ),
+    )
+    return [(cid, list(cv)) for cid, cv in cents]
 
-        memo_key = _fingerprint(
-            "kmeans_train",
-            corpus,
-            {
-                "id": id_col,
-                "vec": vec_col,
-                "k": n_centroids,
-                "iters": n_iters,
-                "seed": seed,
-                "sample": train_sample,
-            },
-        )
-        if memo_key is not None and memo_key in _TRAIN_MEMO:
-            return [(cid, list(cv)) for cid, cv in _TRAIN_MEMO[memo_key]]
+
+def _train_spherical_centroids_build(
+    corpus, id_col, vec_col, n_centroids, n_iters, seed, train_sample
+) -> list[tuple[int, list[float]]]:
+    from aws_etl_spark.ops import lanes
+
     n = corpus.count()
     frac = min(1.0, train_sample / max(n, 1))
     unit = F.transform(F.col(vec_col), lambda x: x.cast("double") / norm(F.col(vec_col)))
@@ -552,7 +550,7 @@ def _train_spherical_centroids(
     # Bounded-collect driver fast path (round-13 session 5 — the
     # float-pagerank treatment): the trainer is SAMPLE-bounded by
     # construction (≤ train_sample rows whatever the corpus size), so
-    # below SPARK_GRAFT_KMEANS_TRAIN_DRIVER_ROWS the init + Lloyd
+    # below lanes.cap("kmeans_train_rows") the init + Lloyd
     # rounds (each a count/collect/BatchEvalPython-assign/explode-agg
     # job chain) collapse to numpy on the collected unit vectors (the
     # SAME per-row `A @ cv` dot and first-max argmax the assign UDF
@@ -561,17 +559,14 @@ def _train_spherical_centroids(
     # rows-only by contract, and the driver-vs-distributed drift is
     # tolerance-pinned in tests/test_r13_fastpaths.py). Above the
     # dial (or with the dial 0) the distributed loop is untouched.
-    cap = int(os.environ.get("SPARK_GRAFT_KMEANS_TRAIN_DRIVER_ROWS", "200000"))
+    cap = lanes.cap("kmeans_train_rows")
     collected = None
     if cap > 0:
         probe = sample.limit(cap + 1).collect()
         if len(probe) <= cap:
             collected = probe
     if collected is not None:
-        cents = _lloyd_driver(collected, n_centroids, n_iters)
-        if memo_key is not None:
-            _TRAIN_MEMO[memo_key] = [(cid, list(cv)) for cid, cv in cents]
-        return cents
+        return _lloyd_driver(collected, n_centroids, n_iters)
 
     sample = sample.cache()
     init = sample.orderBy("sid").limit(n_centroids).collect()
@@ -609,8 +604,6 @@ def _train_spherical_centroids(
             new_cents.append((cid, list(v / nrm) if nrm > 0 else old))
         cents = new_cents
     sample.unpersist()
-    if memo_key is not None:
-        _TRAIN_MEMO[memo_key] = [(cid, list(cv)) for cid, cv in cents]
     return cents
 
 

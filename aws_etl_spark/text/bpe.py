@@ -177,52 +177,25 @@ def apply_merge(seq: DataFrame, best: DataFrame) -> DataFrame:
     return merged
 
 
-# process-scoped trained-state memo (round-13; the trained-quantizer
-# memo of similarity/topk.py applied to BPE): text_bpe_merges,
-# text_bpe_vocab and text_bpe_encode each ran the SAME 3-round merge
-# training (per-round pair-count + argmax + merge jobs) on the same
-# corpus. Keyed on (session identity, pair-cache input fingerprint,
-# text_col, n_rounds) — the cached values are session-owned
-# checkpointed DataFrames, so the session id must be part of the key.
-# A fresh process is cold and bit-identical; SPARK_GRAFT_NO_PAIR_CACHE
-# disables.
-_TRAIN_MEMO: dict = {}
-
-
 def _train_rounds(
     docs: DataFrame, text_col: str, n_rounds: int
 ) -> tuple[DataFrame, list[DataFrame]]:
-    """(final seq state, per-round 1-row merge-rule DataFrames);
-    served from ``_TRAIN_MEMO`` on a repeat (corpus, params) in one
-    session."""
-    import os
+    """(final seq state, per-round 1-row merge-rule DataFrames).
 
-    memo_key = None
-    if not os.environ.get("SPARK_GRAFT_NO_PAIR_CACHE"):
-        from aws_etl_spark.ops.pair_cache import _fingerprint
+    text_bpe_merges, text_bpe_vocab and text_bpe_encode each run the
+    SAME merge training on the same corpus, so the result is held in
+    the process memo (``ops/pair_cache.py::memo``, keyed on session
+    identity and the input fingerprint) and a repeat (corpus, params)
+    in one session trains once."""
+    from aws_etl_spark.ops.pair_cache import memo
 
-        fp = _fingerprint(
-            "bpe_train", docs, {"text": text_col, "rounds": n_rounds}
-        )
-        if fp is not None:
-            try:
-                sid = (
-                    docs.sparkSession.sparkContext.applicationId,
-                    id(docs.sparkSession),
-                )
-            except Exception:
-                sid = None
-            if sid is not None:
-                memo_key = (sid, fp)
-                hit = _TRAIN_MEMO.get(memo_key)
-                if hit is not None:
-                    return hit
-    result = _train_rounds_driver(docs, text_col, n_rounds)
-    if result is None:
-        result = _train_rounds_distributed(docs, text_col, n_rounds)
-    if memo_key is not None:
-        _TRAIN_MEMO[memo_key] = result
-    return result
+    return memo(
+        "bpe_train",
+        docs,
+        {"text": text_col, "rounds": n_rounds},
+        lambda: _train_rounds_driver(docs, text_col, n_rounds)
+        or _train_rounds_distributed(docs, text_col, n_rounds),
+    )
 
 
 def _train_rounds_driver(
@@ -235,7 +208,7 @@ def _train_rounds_driver(
     corpus-sized word-inventory pass, every round runs on the
     vocabulary-sized distinct-word table — state whose size is a
     property of the LANGUAGE, not the corpus. Below
-    ``SPARK_GRAFT_BPE_DRIVER_WORDS`` distinct words the 3 rounds ×
+    ``lanes.cap("bpe_words")`` distinct words the 3 rounds ×
     (pair-count + top-1 + merge + checkpoint) driver-coordinated
     Spark jobs collapse to pure-Python integer arithmetic on the
     collected inventory; above the dial (or when the inventory limit
@@ -248,9 +221,9 @@ def _train_rounds_driver(
     offset of a same-symbol run). Returns None when the dial says
     "too big" — the caller falls through to the distributed loop.
     """
-    import os
+    from aws_etl_spark.ops import lanes
 
-    cap = int(os.environ.get("SPARK_GRAFT_BPE_DRIVER_WORDS", "200000"))
+    cap = lanes.cap("bpe_words")
     if cap <= 0:
         return None
     inv = word_inventory(docs, text_col).limit(cap + 1).collect()

@@ -4,6 +4,9 @@ gate, per queries/dedup_queries.py)."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from aws_etl_spark.dedup import (
@@ -584,6 +587,102 @@ def test_pair_cache_stats_percent_encoded_paths(spark, tmp_path):
     os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
     f2 = _fingerprint("t", spark.read.parquet(p), {})
     assert f1 is not None and f2 is not None and f1 != f2
+
+
+@pytest.mark.parametrize("flag, serves", [("0", True), ("1", False)])
+def test_pair_cache_switch_governs_memo_and_materialized(
+    spark, tmp_path, monkeypatch, flag, serves
+):
+    """One off switch for both process caches: only
+    SPARK_GRAFT_NO_PAIR_CACHE=1 disables; any other value (here 0)
+    leaves memo() and materialized() serving repeat calls."""
+    import pandas as pd
+
+    import aws_etl_spark.ops.pair_cache as pc
+
+    p = str(tmp_path / "docs.parquet")
+    pd.DataFrame({"doc_id": [1, 2], "text": ["a b", "c d"]}).to_parquet(p)
+    df = spark.read.parquet(p)
+    monkeypatch.setenv("SPARK_GRAFT_NO_PAIR_CACHE", flag)
+    assert pc.disabled() is not serves
+
+    first = pc.memo("switch", df, {}, object)
+    second = pc.memo("switch", df, {}, object)
+    assert (first is second) is serves
+
+    builds = []
+
+    def build():
+        builds.append(1)
+        return df
+
+    for _ in range(2):
+        got = pc.materialized("switch", df, {}, build)
+        assert sorted(map(tuple, got.collect())) == [(1, "a b"), (2, "c d")]
+    assert len(builds) == (1 if serves else 2)
+
+
+@pytest.mark.parametrize("race", [False, True])
+def test_pair_cache_scratch_rename_failure(monkeypatch, race):
+    """Scratch-URI lane: a failed rename with no artifact at the
+    destination raises naming both paths and keeps the tmp output; a
+    rename lost to a concurrent writer (destination now exists) drops
+    the tmp dir and serves the winner. Fake FileSystem, no cluster."""
+    import aws_etl_spark.ops.pair_cache as pc
+
+    class FakeFS:
+        def __init__(self):
+            self.present: set[str] = set()
+            self.deleted: list[str] = []
+
+        def exists(self, path):
+            return path in self.present
+
+        def rename(self, src, dst):
+            if race:
+                self.present.add(dst)  # another process won the key
+            return False
+
+        def delete(self, path, recursive):
+            self.deleted.append(path)
+
+    class FakeWriter:
+        def mode(self, _):
+            return self
+
+        def parquet(self, path):
+            fs.present.add(path)
+
+    class FakeBuilt:
+        write = FakeWriter()
+
+    class FakeSpark:
+        class read:  # noqa: N801 — mirrors spark.read.parquet
+            @staticmethod
+            def parquet(path):
+                return ("read", path)
+
+    class FakeDF:
+        sparkSession = FakeSpark()
+
+    fs = FakeFS()
+    root = "fake://scratch/root"
+    monkeypatch.delenv("SPARK_GRAFT_NO_PAIR_CACHE", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_URI", "fake://scratch")
+    monkeypatch.setattr(pc, "_REMOTE_ROOT", root)
+    monkeypatch.setattr(pc, "_fingerprint", lambda *a: "k")
+    monkeypatch.setattr(pc, "_hadoop_fs", lambda spark, uri: (fs, uri))
+
+    final = f"{root}/k"
+    tmp = f"{final}.tmp-{os.getpid()}"
+    if race:
+        assert pc.materialized("t", FakeDF(), {}, FakeBuilt) == ("read", final)
+        assert fs.deleted == [tmp]
+    else:
+        with pytest.raises(RuntimeError) as err:
+            pc.materialized("t", FakeDF(), {}, FakeBuilt)
+        assert tmp in str(err.value) and final in str(err.value)
+        assert fs.deleted == []
 
 
 def test_pair_cache_per_key_locks_are_independent():

@@ -1,12 +1,13 @@
 """Round-13 bounded-state driver fast paths: forced-path equivalence.
 
-Two iterative operators gained a driver fast path this round (the
-bounded-collect pattern): ``pagerank_quantized`` below the
-``SPARK_GRAFT_PAGERANK_DRIVER_EDGES`` edge dial and
-``events_markov_stationary`` below ``SPARK_GRAFT_MARKOV_DRIVER_STATES``.
-Both paths are exact integer arithmetic, so the outputs must be
-BIT-IDENTICAL, not merely close. These tests force each path via the
-dial (0 disables the fast path) and compare full row sets.
+Iterative operators such as ``pagerank_quantized`` (below the
+``pagerank_edges`` cap) and ``events_markov_stationary`` (below
+``markov_states``) run a driver fast path under the caps of
+``aws_etl_spark/ops/lanes.py``. The integer paths are exact, so the
+outputs must be BIT-IDENTICAL, not merely close. These tests compare
+full row sets between the default lane and the forced-distributed
+lane (``SPARK_GRAFT_LANE=distributed`` zeroes every cap); boundary
+tests patch ``lanes.CAPS``.
 """
 
 from __future__ import annotations
@@ -37,9 +38,9 @@ def test_pagerank_quantized_driver_matches_distributed(spark, monkeypatch):
     from aws_etl_spark.dedup.pagerank import pagerank_quantized
 
     pairs = _pairs(spark)
-    monkeypatch.delenv("SPARK_GRAFT_PAGERANK_DRIVER_EDGES", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_LANE", raising=False)
     fast = {tuple(r) for r in pagerank_quantized(pairs).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_PAGERANK_DRIVER_EDGES", "0")
+    monkeypatch.setenv("SPARK_GRAFT_LANE", "distributed")
     slow = {tuple(r) for r in pagerank_quantized(pairs).collect()}
     assert fast == slow
     assert len(fast) == 7  # every node present exactly once
@@ -49,12 +50,13 @@ def test_pagerank_quantized_dial_boundary(spark, monkeypatch):
     """cap == edge count keeps the fast path; cap == edges-1 forces
     the distributed loop (the gate is <=)."""
     from aws_etl_spark.dedup.pagerank import pagerank_quantized
+    from aws_etl_spark.ops import lanes
 
     pairs = _pairs(spark)
     # 8 undirected pairs -> 16 symmetrized edges
-    monkeypatch.setenv("SPARK_GRAFT_PAGERANK_DRIVER_EDGES", "16")
+    monkeypatch.setitem(lanes.CAPS, "pagerank_edges", 16)
     at_cap = {tuple(r) for r in pagerank_quantized(pairs).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_PAGERANK_DRIVER_EDGES", "15")
+    monkeypatch.setitem(lanes.CAPS, "pagerank_edges", 15)
     above = {tuple(r) for r in pagerank_quantized(pairs).collect()}
     assert at_cap == above
 
@@ -89,9 +91,9 @@ def test_markov_stationary_driver_matches_distributed(spark, monkeypatch):
 
     _ensure_loaded()
     fn = REGISTRY["events_markov_stationary"].fn
-    monkeypatch.delenv("SPARK_GRAFT_MARKOV_DRIVER_STATES", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_LANE", raising=False)
     fast = {tuple(r) for r in fn(spark, SF_SMOKE).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_MARKOV_DRIVER_STATES", "0")
+    monkeypatch.setenv("SPARK_GRAFT_LANE", "distributed")
     slow = {tuple(r) for r in fn(spark, SF_SMOKE).collect()}
     assert fast and fast == slow
 
@@ -121,9 +123,9 @@ def test_kcore_driver_matches_distributed(spark, monkeypatch):
     from aws_etl_spark.dedup.graph_metrics import k_core_membership
 
     pairs = _pairs(spark)
-    monkeypatch.delenv("SPARK_GRAFT_KCORE_DRIVER_EDGES", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_LANE", raising=False)
     fast = {tuple(r) for r in k_core_membership(pairs).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_KCORE_DRIVER_EDGES", "0")
+    monkeypatch.setenv("SPARK_GRAFT_LANE", "distributed")
     slow = {tuple(r) for r in k_core_membership(pairs).collect()}
     assert fast == slow
     assert len(fast) == 7  # every node of the fixture graph labeled
@@ -137,9 +139,9 @@ def test_kcenter_driver_matches_distributed(spark, monkeypatch):
          for i in range(1, 12)],
         "vec_id bigint, embedding array<double>",
     )
-    monkeypatch.delenv("SPARK_GRAFT_KCENTER_DRIVER_CELLS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_LANE", raising=False)
     fast = [tuple(r) for r in kcenter_greedy_quantized(emb, k=4).collect()]
-    monkeypatch.setenv("SPARK_GRAFT_KCENTER_DRIVER_CELLS", "0")
+    monkeypatch.setenv("SPARK_GRAFT_LANE", "distributed")
     slow = [tuple(r) for r in kcenter_greedy_quantized(emb, k=4).collect()]
     assert sorted(fast) == sorted(slow)
     assert len(fast) == 4
@@ -153,9 +155,9 @@ def test_kmeans_driver_matches_distributed(spark, monkeypatch):
          for i in range(1, 21)],
         "vec_id bigint, embedding array<double>",
     )
-    monkeypatch.delenv("SPARK_GRAFT_KMEANS_DRIVER_CELLS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_LANE", raising=False)
     fast = {tuple(r) for r in kmeans_quantized(emb, k=4, n_iter=3).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_KMEANS_DRIVER_CELLS", "0")
+    monkeypatch.setenv("SPARK_GRAFT_LANE", "distributed")
     slow = {tuple(r) for r in kmeans_quantized(emb, k=4, n_iter=3).collect()}
     assert fast == slow
     assert len(fast) == 20
@@ -166,9 +168,9 @@ def test_canonical_distance_driver_matches_distributed(spark, monkeypatch):
 
     _ensure_loaded()
     fn = REGISTRY["dedup_canonical_distance"].fn
-    monkeypatch.delenv("SPARK_GRAFT_CANON_DRIVER_EDGES", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_LANE", raising=False)
     fast = {tuple(r) for r in fn(spark, SF_SMOKE).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_CANON_DRIVER_EDGES", "0")
+    monkeypatch.setenv("SPARK_GRAFT_LANE", "distributed")
     slow = {tuple(r) for r in fn(spark, SF_SMOKE).collect()}
     assert fast and fast == slow
 
@@ -177,9 +179,9 @@ def test_lpa_driver_matches_distributed(spark, monkeypatch):
     from aws_etl_spark.dedup.graph_metrics import label_propagation
 
     pairs = _pairs(spark)
-    monkeypatch.delenv("SPARK_GRAFT_LPA_DRIVER_EDGES", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_LANE", raising=False)
     fast = {tuple(r) for r in label_propagation(pairs).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_LPA_DRIVER_EDGES", "0")
+    monkeypatch.setenv("SPARK_GRAFT_LANE", "distributed")
     slow = {tuple(r) for r in label_propagation(pairs).collect()}
     assert fast == slow
     assert len(fast) == 7
@@ -194,9 +196,9 @@ def test_float_pagerank_driver_within_contract(spark, monkeypatch):
     from aws_etl_spark.dedup.pagerank import pagerank
 
     pairs = _pairs(spark)
-    monkeypatch.delenv("SPARK_GRAFT_PAGERANK_DRIVER_EDGES", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_LANE", raising=False)
     fast = {r["node"]: (r["rank"], r["degree"]) for r in pagerank(pairs).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_PAGERANK_DRIVER_EDGES", "0")
+    monkeypatch.setenv("SPARK_GRAFT_LANE", "distributed")
     slow = {r["node"]: (r["rank"], r["degree"]) for r in pagerank(pairs).collect()}
     assert set(fast) == set(slow) and len(fast) == 7
     for n in fast:
@@ -211,6 +213,7 @@ def test_bpe_driver_matches_distributed(spark, monkeypatch):
     left-to-right merge — on all three consumers (merges, vocab, and
     the final segmentation encode joins against)."""
     import aws_etl_spark.text.bpe as bpe
+    from aws_etl_spark.ops import pair_cache
 
     docs = spark.createDataFrame(
         [
@@ -223,7 +226,7 @@ def test_bpe_driver_matches_distributed(spark, monkeypatch):
     )
 
     def train():
-        bpe._TRAIN_MEMO.clear()
+        pair_cache._MEMO.clear()
         merges, vocab = bpe.bpe_train(docs, "text", n_rounds=3)
         seq = bpe.bpe_final_state(docs, "text", n_rounds=3)
         return (
@@ -232,9 +235,9 @@ def test_bpe_driver_matches_distributed(spark, monkeypatch):
             sorted(tuple(r) for r in seq.collect()),
         )
 
-    monkeypatch.delenv("SPARK_GRAFT_BPE_DRIVER_WORDS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_LANE", raising=False)
     fast = train()
-    monkeypatch.setenv("SPARK_GRAFT_BPE_DRIVER_WORDS", "0")
+    monkeypatch.setenv("SPARK_GRAFT_LANE", "distributed")
     slow = train()
     assert fast == slow
     assert len(fast[0]) == 3  # three merge rules learned
@@ -244,6 +247,7 @@ def test_bpe_driver_dial_boundary(spark, monkeypatch):
     """cap == distinct-word count keeps the fast path; cap one below
     forces the distributed loop (the limit probe overflows)."""
     import aws_etl_spark.text.bpe as bpe
+    from aws_etl_spark.ops import lanes, pair_cache
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma alpha"), (2, "beta delta")],
@@ -252,16 +256,16 @@ def test_bpe_driver_dial_boundary(spark, monkeypatch):
     n_words = 4  # alpha beta gamma delta
 
     def train():
-        bpe._TRAIN_MEMO.clear()
+        pair_cache._MEMO.clear()
         merges, vocab = bpe.bpe_train(docs, "text", n_rounds=2)
         return (
             sorted(tuple(r) for r in merges.collect()),
             sorted(tuple(r) for r in vocab.collect()),
         )
 
-    monkeypatch.setenv("SPARK_GRAFT_BPE_DRIVER_WORDS", str(n_words))
+    monkeypatch.setitem(lanes.CAPS, "bpe_words", n_words)
     at_cap = train()
-    monkeypatch.setenv("SPARK_GRAFT_BPE_DRIVER_WORDS", str(n_words - 1))
+    monkeypatch.setitem(lanes.CAPS, "bpe_words", n_words - 1)
     below = train()
     assert at_cap == below
 
@@ -331,16 +335,17 @@ def test_kmeans_train_driver_matches_distributed(spark, monkeypatch):
     cluster sums are partition-order dependent, so bit-equality was
     never pinned; both consumers are rows-only)."""
     import aws_etl_spark.similarity.topk as topk
+    from aws_etl_spark.ops import pair_cache
     from aws_etl_spark.queries.registry import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    monkeypatch.delenv("SPARK_GRAFT_KMEANS_TRAIN_DRIVER_ROWS", raising=False)
-    topk._TRAIN_MEMO.clear()
+    monkeypatch.delenv("SPARK_GRAFT_LANE", raising=False)
+    pair_cache._MEMO.clear()
     fast = topk._train_spherical_centroids(emb, "vec_id", "embedding", 16, 2, 42)
-    monkeypatch.setenv("SPARK_GRAFT_KMEANS_TRAIN_DRIVER_ROWS", "0")
-    topk._TRAIN_MEMO.clear()
+    monkeypatch.setenv("SPARK_GRAFT_LANE", "distributed")
+    pair_cache._MEMO.clear()
     slow = topk._train_spherical_centroids(emb, "vec_id", "embedding", 16, 2, 42)
-    topk._TRAIN_MEMO.clear()
+    pair_cache._MEMO.clear()
     assert [c for c, _ in fast] == [c for c, _ in slow]
     for (_, va), (_, vb) in zip(fast, slow):
         assert len(va) == len(vb)
@@ -353,18 +358,20 @@ def test_kmeans_train_driver_dial_boundary(spark, monkeypatch):
     distributed loop (the limit probe overflows) — same centroids to
     tolerance either way."""
     import aws_etl_spark.similarity.topk as topk
+    from aws_etl_spark.ops import lanes, pair_cache
     from aws_etl_spark.queries.registry import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    monkeypatch.setenv("SPARK_GRAFT_KMEANS_TRAIN_DRIVER_ROWS", "1")
-    topk._TRAIN_MEMO.clear()
+    default_cap = lanes.CAPS["kmeans_train_rows"]
+    monkeypatch.setitem(lanes.CAPS, "kmeans_train_rows", 1)
+    pair_cache._MEMO.clear()
     forced_slow = topk._train_spherical_centroids(
         emb, "vec_id", "embedding", 8, 1, 7
     )
-    monkeypatch.delenv("SPARK_GRAFT_KMEANS_TRAIN_DRIVER_ROWS", raising=False)
-    topk._TRAIN_MEMO.clear()
+    monkeypatch.setitem(lanes.CAPS, "kmeans_train_rows", default_cap)
+    pair_cache._MEMO.clear()
     fast = topk._train_spherical_centroids(emb, "vec_id", "embedding", 8, 1, 7)
-    topk._TRAIN_MEMO.clear()
+    pair_cache._MEMO.clear()
     assert len(forced_slow) == len(fast) == 8
     for (_, va), (_, vb) in zip(fast, forced_slow):
         for x, y in zip(va, vb):
@@ -377,6 +384,7 @@ def test_pq_trainer_driver_matches_distributed(spark, monkeypatch):
     integer arithmetic throughout, so exact equality on codebooks,
     codes, and the downstream ADC/recall outputs."""
     import aws_etl_spark.similarity.pq as pq
+    from aws_etl_spark.ops import pair_cache
 
     emb = spark.createDataFrame(
         [(i, [float(i % 5) * 0.3 - 0.5, float(i % 3) * 0.4,
@@ -386,15 +394,15 @@ def test_pq_trainer_driver_matches_distributed(spark, monkeypatch):
     )
 
     def run():
-        pq._PQ_MEMO.clear()
+        pair_cache._MEMO.clear()
         adc, _ = pq.pq_adc_topk(emb, m=2, k=4, n_iter=2, n_queries=3, topk=3)
         return sorted(tuple(r) for r in adc.collect())
 
-    monkeypatch.delenv("SPARK_GRAFT_PQ_DRIVER_CELLS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_LANE", raising=False)
     fast = run()
-    monkeypatch.setenv("SPARK_GRAFT_PQ_DRIVER_CELLS", "0")
+    monkeypatch.setenv("SPARK_GRAFT_LANE", "distributed")
     slow = run()
-    pq._PQ_MEMO.clear()
+    pair_cache._MEMO.clear()
     assert fast and fast == slow
 
 
@@ -402,6 +410,7 @@ def test_pq_trainer_dial_boundary(spark, monkeypatch):
     """cap == cell count keeps the fast path; one below forces the
     distributed loop (the gate is <=) — identical output either way."""
     import aws_etl_spark.similarity.pq as pq
+    from aws_etl_spark.ops import lanes, pair_cache
 
     emb = spark.createDataFrame(
         [(i, [float(i % 4) * 0.2, float(i % 6) * 0.15])
@@ -411,13 +420,13 @@ def test_pq_trainer_dial_boundary(spark, monkeypatch):
     cells = 12 * 2
 
     def run():
-        pq._PQ_MEMO.clear()
+        pair_cache._MEMO.clear()
         adc, _ = pq.pq_adc_topk(emb, m=2, k=3, n_iter=1, n_queries=2, topk=2)
         return sorted(tuple(r) for r in adc.collect())
 
-    monkeypatch.setenv("SPARK_GRAFT_PQ_DRIVER_CELLS", str(cells))
+    monkeypatch.setitem(lanes.CAPS, "pq_cells", cells)
     at_cap = run()
-    monkeypatch.setenv("SPARK_GRAFT_PQ_DRIVER_CELLS", str(cells - 1))
+    monkeypatch.setitem(lanes.CAPS, "pq_cells", cells - 1)
     below = run()
-    pq._PQ_MEMO.clear()
+    pair_cache._MEMO.clear()
     assert at_cap == below

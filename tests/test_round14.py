@@ -114,8 +114,8 @@ def test_min_df_prune_is_pair_preserving(spark, tmp_path, monkeypatch):
 def test_skew_probe_share_and_floor(spark, tmp_path, monkeypatch):
     """hot_key_share computes the hottest key's row share; the
     engagement floor keeps tiny (trivially share-skewed) corpora on
-    the historical plan, and the env dials force both ends."""
-    from aws_etl_spark.ops import skew_probe
+    the historical plan, and the module constants force both ends."""
+    from aws_etl_spark.ops import pair_cache, skew_probe
 
     rows = [(1, i) for i in range(8)] + [(2, 100), (3, 101)]
     src = str(tmp_path / "ev.parquet")
@@ -123,28 +123,26 @@ def test_skew_probe_share_and_floor(spark, tmp_path, monkeypatch):
         1
     ).write.parquet(src)
     df = spark.read.parquet(src)
+    monkeypatch.delenv("SPARK_GRAFT_NO_PAIR_CACHE", raising=False)
     share, tot = skew_probe.hot_key_share(df, "user_id")
     assert tot == 10 and abs(share - 0.8) < 1e-9
     # memoized: a second call must not launch a job — poke the memo
-    from aws_etl_spark.ops.pair_cache import _fingerprint
-
-    assert _fingerprint("hot_key_share:user_id", df, {}) in skew_probe._MEMO
+    sid = (spark.sparkContext.applicationId, id(df.sparkSession))
+    fp = pair_cache._fingerprint("hot_key_share:user_id", df, {})
+    assert pair_cache._MEMO[(sid, fp)] == (share, tot)
     # default floors (64 MB input / 1M rows) keep the tiny 80%-skewed
     # frame un-chunked — and the byte floor decides WITHOUT a job
-    monkeypatch.delenv("SPARK_GRAFT_SKEW_SHARE_PCT", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_SKEW_MIN_ROWS", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_SKEW_MIN_BYTES", raising=False)
     assert skew_probe.pick_chunked(df, "user_id") is False
     # byte floor alone lowered: row floor still holds the line
-    monkeypatch.setenv("SPARK_GRAFT_SKEW_MIN_BYTES", "0")
+    monkeypatch.setattr(skew_probe, "MIN_BYTES", 0)
     assert skew_probe.pick_chunked(df, "user_id") is False
     # both floors lowered -> the share decides
-    monkeypatch.setenv("SPARK_GRAFT_SKEW_MIN_ROWS", "1")
+    monkeypatch.setattr(skew_probe, "MIN_ROWS", 1)
     assert skew_probe.pick_chunked(df, "user_id") is True
     # hard dial ends
-    monkeypatch.setenv("SPARK_GRAFT_SKEW_SHARE_PCT", "100")
+    monkeypatch.setattr(skew_probe, "CHUNK_SHARE", 1.0)
     assert skew_probe.pick_chunked(df, "user_id") is False
-    monkeypatch.setenv("SPARK_GRAFT_SKEW_SHARE_PCT", "0")
+    monkeypatch.setattr(skew_probe, "CHUNK_SHARE", 0.0)
     assert skew_probe.pick_chunked(df, "user_id") is True
 
 
@@ -154,13 +152,14 @@ def test_skew_probe_routes_parent_to_chunked_twin(spark, sf_dir,
     twins' rows (hash-identical by the shared oracle); with it forced
     off, the historical rows. Both lanes equal — the probe can never
     change what the queries compute."""
+    from aws_etl_spark.ops import skew_probe
     from aws_etl_spark.queries.registry import REGISTRY, _ensure_loaded
 
     _ensure_loaded()
     for name in ("events_sessionization", "events_markov_entropy"):
-        monkeypatch.setenv("SPARK_GRAFT_SKEW_SHARE_PCT", "100")
+        monkeypatch.setattr(skew_probe, "CHUNK_SHARE", 1.0)
         plain = sorted(map(tuple, REGISTRY[name].fn(spark, sf_dir).collect()))
-        monkeypatch.setenv("SPARK_GRAFT_SKEW_SHARE_PCT", "0")
+        monkeypatch.setattr(skew_probe, "CHUNK_SHARE", 0.0)
         chunked = sorted(map(tuple, REGISTRY[name].fn(spark, sf_dir).collect()))
         assert plain == chunked, name
         assert len(plain) > 0, name

@@ -110,10 +110,11 @@ def _persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
 
-def test_lru_eviction_frees_blocks_and_restages(spark, tmp_path):
+def test_lru_eviction_frees_blocks_and_restages(spark, tmp_path, monkeypatch):
     """Staging past the cap evicts the oldest entry AND unpersists its
     checkpointed blocks; the evicted text re-stages cleanly on the
     next request (a fresh checkpoint, not the dead one)."""
+    from aws_etl_spark.queries import registry
     from aws_etl_spark.queries.registry import (
         _STAGE_CACHE,
         _STAGE_LATEST,
@@ -121,7 +122,7 @@ def test_lru_eviction_frees_blocks_and_restages(spark, tmp_path):
     )
 
     sf = _mk_sf(tmp_path)
-    os.environ["SPARK_GRAFT_STAGE_CACHE_CAP"] = "2"
+    monkeypatch.setattr(registry, "_STAGE_CACHE_CAP", 2)
     try:
         _STAGE_CACHE.clear()
         _STAGE_LATEST.clear()
@@ -139,7 +140,6 @@ def test_lru_eviction_frees_blocks_and_restages(spark, tmp_path):
         assert len(_STAGE_CACHE) == 2
         assert _persistent_rdds(spark) == base + 2
     finally:
-        os.environ.pop("SPARK_GRAFT_STAGE_CACHE_CAP", None)
         _STAGE_CACHE.clear()
         _STAGE_LATEST.clear()
 

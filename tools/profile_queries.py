@@ -32,6 +32,15 @@ if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
 
+def _events(logs: list[Path]):
+    """Yield each JSON event of the event-log files, one file open at
+    a time."""
+    for p in logs:
+        with open(p) as fh:
+            for line in fh:
+                yield json.loads(line)
+
+
 def main() -> None:
     names = sys.argv[1:]
     if not names:
@@ -91,41 +100,36 @@ def main() -> None:
                  "sh_read_b": 0, "sh_write_b": 0, "fetch_wait_ms": 0,
                  "input_b": 0, "name": ""}
     )
-    import itertools
-
-    with_lines = itertools.chain.from_iterable(open(p) for p in logs)
-    if True:
-        for line in with_lines:
-            ev = json.loads(line)
-            t = ev.get("Event")
-            if t == "SparkListenerJobStart":
-                desc = ev.get("Properties", {}).get(
-                    "spark.job.description", ""
-                )
-                jid = ev["Job ID"]
-                job_desc[jid] = desc
-                for sid in ev.get("Stage IDs", []):
-                    stage_to_job[sid] = jid
-            elif t == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                per_stage[si["Stage ID"]]["name"] = si.get("Stage Name", "")
-            elif t == "SparkListenerTaskEnd":
-                sid = ev["Stage ID"]
-                m = ev.get("Task Metrics") or {}
-                s = per_stage[sid]
-                s["tasks"] += 1
-                s["run_ms"] += m.get("Executor Run Time", 0)
-                s["cpu_ms"] += m.get("Executor CPU Time", 0) // 1_000_000
-                s["gc_ms"] += m.get("JVM GC Time", 0)
-                sr = m.get("Shuffle Read Metrics") or {}
-                s["sh_read_b"] += sr.get("Remote Bytes Read", 0) + sr.get(
-                    "Local Bytes Read", 0
-                )
-                s["fetch_wait_ms"] += sr.get("Fetch Wait Time", 0)
-                sw = m.get("Shuffle Write Metrics") or {}
-                s["sh_write_b"] += sw.get("Shuffle Bytes Written", 0)
-                im = m.get("Input Metrics") or {}
-                s["input_b"] += im.get("Bytes Read", 0)
+    for ev in _events(logs):
+        t = ev.get("Event")
+        if t == "SparkListenerJobStart":
+            desc = ev.get("Properties", {}).get(
+                "spark.job.description", ""
+            )
+            jid = ev["Job ID"]
+            job_desc[jid] = desc
+            for sid in ev.get("Stage IDs", []):
+                stage_to_job[sid] = jid
+        elif t == "SparkListenerStageCompleted":
+            si = ev["Stage Info"]
+            per_stage[si["Stage ID"]]["name"] = si.get("Stage Name", "")
+        elif t == "SparkListenerTaskEnd":
+            sid = ev["Stage ID"]
+            m = ev.get("Task Metrics") or {}
+            s = per_stage[sid]
+            s["tasks"] += 1
+            s["run_ms"] += m.get("Executor Run Time", 0)
+            s["cpu_ms"] += m.get("Executor CPU Time", 0) // 1_000_000
+            s["gc_ms"] += m.get("JVM GC Time", 0)
+            sr = m.get("Shuffle Read Metrics") or {}
+            s["sh_read_b"] += sr.get("Remote Bytes Read", 0) + sr.get(
+                "Local Bytes Read", 0
+            )
+            s["fetch_wait_ms"] += sr.get("Fetch Wait Time", 0)
+            sw = m.get("Shuffle Write Metrics") or {}
+            s["sh_write_b"] += sw.get("Shuffle Bytes Written", 0)
+            im = m.get("Input Metrics") or {}
+            s["input_b"] += im.get("Bytes Read", 0)
 
     per_query: dict[str, dict] = defaultdict(
         lambda: {"jobs": 0, "tasks": 0, "run_s": 0.0, "cpu_s": 0.0,
