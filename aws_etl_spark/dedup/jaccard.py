@@ -145,7 +145,7 @@ def _capped_shingles(
     filter rides the SAME pushed parquet predicate as the max_df cap
     (cached lane only — the uncached fallback keeps its pinned
     historical pipeline)."""
-    from aws_etl_spark.ops.pair_cache import cache_active
+    from aws_etl_spark.ops.artifacts import cache_active
 
     if cache_active(df):
         ann = _annotated_shingles(df, id_col, text_col, k)
@@ -180,10 +180,10 @@ def _annotated_shingles(
     occurrence. This is the superset EVERY shingle-family consumer
     derives from (capped generators filter ``df_s <= max_df``; the
     prefix filter ranks by ascending ``df_s``), materialized once per
-    (id_col, text_col, k, input) in the process-scoped pair cache.
+    (id_col, text_col, k, input) in the process-scoped artifact store.
     Callers must check ``cache_active`` first — there is no fallback,
     so uncached consumers keep their historical pinned pipelines."""
-    from aws_etl_spark.ops.pair_cache import materialized
+    from aws_etl_spark.ops.artifacts import materialized
 
     def build() -> DataFrame:
         return (
@@ -213,13 +213,13 @@ def _raw_shingle_pairs(
     self-join + aggregation that BOTH the Jaccard and the containment
     pair generators pay, before either applies its (cheap, row-local)
     score filter. Materialized once per (k, max_df, input) in the
-    process-scoped pair cache so the second consumer pays a parquet
+    process-scoped artifact store so the second consumer pays a parquet
     read + filter instead of re-running the join; a fresh process is
     cold and bit-identical (counts are exact integers — the parquet
     round-trip changes row order only). The uncached fallback is the
     historical inline join, so plan-structure tests see the same
     pipeline as before."""
-    from aws_etl_spark.ops.pair_cache import materialized
+    from aws_etl_spark.ops.artifacts import materialized
 
     def build() -> DataFrame:
         # min_df=2: a df==1 shingle can only meet itself in the
@@ -290,15 +290,15 @@ def ngram_jaccard_pairs(
     pass ``max_df=None`` for the uncapped exact join).
 
     The pair table is materialized once per process per (params,
-    input) and reused by later consumers — see ``ops/pair_cache.py``
+    input) and reused by later consumers — see ``ops/artifacts.py``
     (a fresh process computes it exactly as before). NOTE this makes
     the first call EAGER for file-backed inputs: it runs the full job
     and writes scratch parquet, and the returned frame is a scan of
     that parquet, not the lazy pipeline. Plan-inspection or
     ``limit()``-style callers that need the lazy plan must set
-    ``SPARK_GRAFT_NO_PAIR_CACHE=1`` (the in-repo plan tests do).
+    ``SPARK_GRAFT_NO_CACHE=1`` (the in-repo plan tests do).
     """
-    from aws_etl_spark.ops.pair_cache import materialized
+    from aws_etl_spark.ops.artifacts import materialized
 
     def build() -> DataFrame:
         raw = _raw_shingle_pairs(

@@ -104,17 +104,17 @@ def minhash_near_dup_pairs(
 
     The verified pair table is materialized once per process per
     (params, input) and reused by later consumers — see
-    ``ops/pair_cache.py`` (a fresh process computes it as before).
+    ``ops/artifacts.py`` (a fresh process computes it as before).
     NOTE this makes the first call EAGER for file-backed inputs: it
     runs the full job and writes scratch parquet, and the returned
     frame is a scan of that parquet, not the lazy pipeline.
     Plan-inspection or ``limit()``-style callers that need the lazy
-    plan must set ``SPARK_GRAFT_NO_PAIR_CACHE=1`` (the in-repo plan
+    plan must set ``SPARK_GRAFT_NO_CACHE=1`` (the in-repo plan
     tests do).
     """
     if n_hashes % bands != 0:
         raise ValueError(f"n_hashes={n_hashes} not divisible by bands={bands}")
-    from aws_etl_spark.ops.pair_cache import materialized
+    from aws_etl_spark.ops.artifacts import materialized
 
     params = {"id_col": id_col, "text_col": text_col, "k": k,
               "n_hashes": n_hashes, "bands": bands, "seed": seed,

@@ -71,7 +71,7 @@ def prefix_filter_jaccard_pairs(
     # cache); the checkpoint materializes the exploded shingles ONCE
     # and downstream plans read the RDD, the same trade as the staged
     # rescan-family queries.
-    from aws_etl_spark.ops.pair_cache import cache_active
+    from aws_etl_spark.ops.artifacts import cache_active
 
     doc_win = Window.partitionBy("doc")
     if cache_active(df):

@@ -43,14 +43,14 @@ def _span_occurrences(
     """Per-(doc, span) occurrence counts ``(doc, shingle, occ)`` — the
     one artifact BOTH span views derive from: the census reads
     ``(span → count rows, sum occ, min doc)`` and the profile reads
-    the distinct keys. Served from the process-scoped pair cache
+    the distinct keys. Served from the process-scoped artifact store
     (round-13 optimization) so the second consumer in a process pays a
     parquet read instead of re-exploding the corpus; a fresh process
     is cold and bit-identical (exact integer counts). Returns ``None``
     when the cache cannot serve (env hatch / in-memory input) — the
     callers then keep their historical single-consumer pipelines, so
     the pinned plan shapes are unchanged."""
-    from aws_etl_spark.ops.pair_cache import materialized
+    from aws_etl_spark.ops.artifacts import materialized
 
     def build() -> DataFrame:
         return (

@@ -11,7 +11,7 @@ there but cost ~1.8x on uniform data (the extra chunk-stitch pass).
 Neither form dominates, so the right form is a DATA property — this
 probe measures it: one map-side-combined count of the hottest key's
 row share (the ``ops/scale.py::hot_keys`` survey reduced to a single
-scalar), held in the process memo (``ops/pair_cache.py::memo``) so
+scalar), held in the process memo (``ops/artifacts.py::memo``) so
 one bench/driver session pays it once per corpus however many
 queries consult it.
 
@@ -48,11 +48,11 @@ def hot_key_share(df: DataFrame, key: str) -> tuple[float, int]:
     """(row share of the single hottest ``key`` value, total rows).
 
     One groupBy count + one tiny agg — map-side combined, linear in
-    the input, no join. Memoized on the pair-cache input fingerprint
+    the input, no join. Memoized on the artifact-store input key
     (canonicalized plan + file stats), so it re-runs when the data
     changes and is free for the second consumer in a session.
     """
-    from aws_etl_spark.ops.pair_cache import memo
+    from aws_etl_spark.ops.artifacts import memo
 
     def build() -> tuple[float, int]:
         row = (

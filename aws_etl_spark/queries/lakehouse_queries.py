@@ -47,49 +47,32 @@ def _lake_root(sf_dir: str) -> Path:
 
 
 # --------------------------------------------------------------------------
-# Process-scoped build memo (round-13 optimization — the pair-cache /
-# stage-cache discipline applied to scratch-lake construction). Three
-# registry queries consume build_versioned_table and one each the
-# zone-map/small-file tables; under the driver contract each query may
-# run alone (fresh process = cold build, bit-identical), but inside
-# one bench/driver process every consumer re-ran the SAME deterministic
-# builder — rmtree + N write jobs + N stats jobs — against an unchanged
-# input. The memo keys on (builder tag, sf_dir, orders.parquet
-# (size, mtime_ns)) and revalidates that the built root still exists,
-# so a rewritten source or a vacuumed scratch dir rebuilds. The built
-# tables are plain files + JSON manifests — session-independent, and
-# every consumer is read-only (vacuum_plan plans, never deletes).
-# ``SPARK_GRAFT_NO_PAIR_CACHE=1`` disables it with the other process
-# caches (``ops/pair_cache.py::disabled``).
+# Process-scoped build memo (round-13 optimization): inside one
+# process, every consumer of a scratch table re-ran the SAME
+# deterministic builder (rmtree + N write jobs + N stats jobs) against
+# an unchanged input. The artifact store keys each build on (builder
+# tag, sf_dir) plus the orders.parquet snapshot and rebuilds when the
+# built root is gone. The tables are plain files + JSON manifests,
+# session-independent and only read by consumers (vacuum_plan plans,
+# never deletes).
 # --------------------------------------------------------------------------
 
-_BUILD_MEMO: dict = {}
 
-
-def _lake_fingerprint(tag: str, sf_dir: str):
-    p = os.path.join(sf_dir, "orders.parquet")
-    try:
-        st = os.stat(p)
-        stats = (st.st_size, st.st_mtime_ns)
-    except OSError:
-        stats = (-1, -1)
-    return (tag, os.path.abspath(sf_dir), stats)
+def _built_root_exists(res) -> bool:
+    return Path(res[0] if isinstance(res, tuple) else res).is_dir()
 
 
 def _memo_build(tag: str, sf_dir: str, build):
-    from aws_etl_spark.ops.pair_cache import disabled
+    from aws_etl_spark.ops import artifacts
 
-    if disabled():
-        return build()
-    key = _lake_fingerprint(tag, sf_dir)
-    hit = _BUILD_MEMO.get(key)
-    if hit is not None:
-        root = hit[0] if isinstance(hit, tuple) else hit
-        if Path(root).is_dir():
-            return hit
-    res = build()
-    _BUILD_MEMO[key] = res
-    return res
+    return artifacts.cached(
+        f"lake:{tag}",
+        None,
+        os.path.abspath(sf_dir),
+        artifacts.snapshot([os.path.join(sf_dir, "orders.parquet")]),
+        build,
+        valid=_built_root_exists,
+    )
 
 
 def _rollup(orders: DataFrame, years, urgent: bool) -> DataFrame:

@@ -20,11 +20,12 @@ Determinism contract (driver compares order-insensitive value hashes):
 
 from __future__ import annotations
 
-from collections import OrderedDict
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from aws_etl_spark.ops import artifacts
 
 ALL_TABLES = (
     "region",
@@ -253,41 +254,20 @@ def sql_query(
     )(fn)
 
 
-# Process-scoped cache of checkpointed stage views (round 12 — the
-# ops/pair_cache.py discipline applied to staged_sql_query; round 13
-# hardening closes the r12 advisories in code): key =
-# (session identity, substituted SQL text, upstream-chain texts,
-# sf_dir, per-table (size, mtime_ns) stats of every table the query
-# declares). Conservative over-invalidation by design — the key stats
-# EVERY declared table, not only the ones the view text reads.
-# Session identity is (applicationId, id(spark)): the JVM
-# applicationId alone conflates spark.newSession() siblings, whose
-# createOrReplaceTempView would register in the ORIGINATING session's
-# catalog, not the caller's (r12 ADVICE). The upstream chain folds
-# the substituted SQL of every EARLIER view op in the same query's
-# stage chain into the fingerprint — a staged view that references a
-# prior temp view BY NAME is otherwise cached without its upstream
-# definition, and two queries reusing one view name with different
-# texts but an identical downstream text would share a stale
-# checkpoint (r12 ADVICE medium; no current query does this — the
-# fingerprint now makes the safety structural, not conventional).
+# Checkpointed stage views are reused through the artifact store
+# (ops/artifacts.py, tag "stage"; see staged_sql_query). The snapshot
+# stats EVERY declared table, not only the ones the view text reads —
+# conservative over-invalidation by design. The identity folds in the
+# substituted SQL of every EARLIER view op of the query's stage chain:
+# a view that references a prior temp view BY NAME would otherwise be
+# served a checkpoint built over a different upstream text.
 #
-# The cache is a bounded LRU of _STAGE_CACHE_CAP entries: eviction —
-# by capacity or by supersession when the same (session, sql, chain,
-# sf_dir) is re-staged against a changed input snapshot — unpersists the
-# checkpointed RDD's executor blocks immediately (r12 verdict item
-# 3). An evicted DataFrame's lineage is truncated by localCheckpoint,
-# so a consumer that held the final DataFrame of an earlier query
-# past dozens of intervening stagings fails LOUDLY
-# (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) rather than silently reading
-# stale or recomputed data — re-invoke the registered callable. In
-# the driver/bench usage (prompt collects, ~3 dozen distinct stage
-# texts) capacity eviction never fires.
-_STAGE_CACHE: "OrderedDict" = OrderedDict()
-_STAGE_CACHE_STATS = {"hits": 0, "misses": 0, "evictions": 0}
-# (session, sql, chain, sf_dir) -> full cache key, for supersession
-_STAGE_LATEST: dict = {}
-_STAGE_CACHE_CAP = 64
+# Eviction unpersists the checkpointed blocks at once. An evicted
+# DataFrame's lineage is truncated by localCheckpoint, so a consumer
+# still holding an earlier query's final DataFrame fails LOUDLY
+# (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) rather than reading stale or
+# recomputed data — re-invoke the registered callable.
+_STAGE_CACHE_STATS = artifacts.stats("stage")
 
 
 def _unpersist_stage(df: DataFrame) -> None:
@@ -303,30 +283,6 @@ def _unpersist_stage(df: DataFrame) -> None:
         pass
 
 
-def _stage_fingerprint(
-    spark: SparkSession,
-    sf_dir: str,
-    tables: tuple[str, ...],
-    sql: str,
-    chain: tuple = (),
-):
-    import os
-
-    stats = []
-    for t in tables:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        try:
-            st = os.stat(p)
-            stats.append((t, st.st_size, st.st_mtime_ns))
-        except OSError:
-            stats.append((t, -1, -1))
-    try:
-        session_id = (spark.sparkContext.applicationId, id(spark))
-    except Exception:  # stopped context — never cache against it
-        session_id = object()
-    return (session_id, sql, chain, os.path.abspath(sf_dir), tuple(stats))
-
-
 def _staged_view(
     spark: SparkSession,
     sf_dir: str,
@@ -334,9 +290,7 @@ def _staged_view(
     sql: str,
     chain: tuple = (),
 ) -> DataFrame:
-    """Checkpointed stage view, served from the process cache when the
-    (session, sql, upstream chain, input snapshot) fingerprint
-    matches; bounded LRU with eager block eviction.
+    """Checkpointed stage view, served from the artifact store.
 
     NOTE (round-13 measurement): widening a stage before the
     checkpoint (round-robin repartition of the aggregate to core
@@ -346,35 +300,15 @@ def _staged_view(
     AQE's coalesced width."""
     import os
 
-    def _build() -> DataFrame:
-        return spark.sql(sql).localCheckpoint(eager=True)
-
-    if os.environ.get("SPARK_GRAFT_NO_STAGE_CACHE"):
-        return _build()
-    key = _stage_fingerprint(spark, sf_dir, tables, sql, chain)
-    df = _STAGE_CACHE.get(key)
-    if df is not None:
-        _STAGE_CACHE_STATS["hits"] += 1
-        _STAGE_CACHE.move_to_end(key)
-        return df
-    _STAGE_CACHE_STATS["misses"] += 1
-    df = _build()
-    base = key[:4]  # (session, sql, chain, sf_dir) — snapshot-free
-    stale = _STAGE_LATEST.get(base)
-    if stale is not None and stale != key:
-        # superseded: same stage against a rewritten input snapshot
-        old = _STAGE_CACHE.pop(stale, None)
-        if old is not None:
-            _STAGE_CACHE_STATS["evictions"] += 1
-            _unpersist_stage(old)
-    _STAGE_LATEST[base] = key
-    _STAGE_CACHE[key] = df
-    while len(_STAGE_CACHE) > _STAGE_CACHE_CAP:
-        old_key, old_df = _STAGE_CACHE.popitem(last=False)
-        _STAGE_LATEST.pop(old_key[:4], None)
-        _STAGE_CACHE_STATS["evictions"] += 1
-        _unpersist_stage(old_df)
-    return df
+    paths = [os.path.join(sf_dir, f"{t}.parquet") for t in tables]
+    return artifacts.cached(
+        "stage",
+        spark,
+        (sql, chain, os.path.abspath(sf_dir)),
+        artifacts.snapshot(paths),
+        lambda: spark.sql(sql).localCheckpoint(eager=True),
+        release=_unpersist_stage,
+    )
 
 
 def _scalar_literal(key: str, v) -> str:
@@ -466,20 +400,21 @@ def staged_sql_query(
     results are hash-identical because every stage computes the exact
     expressions the inlined CTEs computed.
 
-    **Stage cache (round 12, the pair-cache pattern)**: several
-    queries stage IDENTICAL view texts over the same input — the
-    events daily spine (``_acf_daily_sql``) feeds ten monitors, the
-    orders daily spine two — so checkpointed views are reused
-    process-wide, keyed on (session identity, substituted SQL text,
-    upstream-chain texts, sf_dir, per-table (size, mtime_ns) stats of
-    every declared input). A rewritten input file misses by
-    fingerprint (this TIGHTENS the eager-stage contract: re-invoking
-    against changed inputs always re-stages — and the superseded
-    checkpoint's blocks are freed immediately), a fresh process
-    starts cold (the driver's per-query isolation is untouched), and
-    ``SPARK_GRAFT_NO_STAGE_CACHE=1`` disables reuse entirely. The
-    cache is a bounded LRU of ``_STAGE_CACHE_CAP`` (64) entries;
-    eviction unpersists the checkpointed blocks, so a long-lived multi-corpus session is
+    **Stage cache (round 12)**: several queries stage IDENTICAL view
+    texts over the same input — the events daily spine
+    (``_acf_daily_sql``) feeds ten monitors, the orders daily spine
+    two — so checkpointed views are reused process-wide through the
+    artifact store (``ops/artifacts.py``, tag ``"stage"``), keyed on
+    (session identity, substituted SQL text, upstream-chain texts,
+    sf_dir) plus the (size, mtime_ns) snapshot of every declared
+    input. A rewritten input file misses by snapshot (this TIGHTENS
+    the eager-stage contract: re-invoking against changed inputs
+    always re-stages — and the superseded checkpoint's blocks are
+    freed immediately), a fresh process starts cold (the driver's
+    per-query isolation is untouched), and ``SPARK_GRAFT_NO_CACHE=1``
+    disables reuse entirely. The store is a bounded LRU of
+    ``artifacts.CAP`` (64) entries; eviction unpersists the
+    checkpointed blocks, so a long-lived multi-corpus session is
     bounded in executor storage, and a consumer still holding a final
     DataFrame whose stage was evicted fails loudly rather than
     reading stale data. Guards and scalars still execute per

@@ -63,10 +63,10 @@ def _pq_trained(
     embeddings_pq_adc and embeddings_pq_recall train byte-identical
     codebooks (integer-exact Lloyd rounds, s DIV n) over the same
     exploded components, so the triple is held in the process memo
-    (``ops/pair_cache.py::memo``, keyed on session identity and the
+    (``ops/artifacts.py::memo``, keyed on session identity and the
     input fingerprint): the second consumer in a session skips the
     explode + Lloyd rounds + encode."""
-    from aws_etl_spark.ops.pair_cache import memo
+    from aws_etl_spark.ops.artifacts import memo
 
     return memo(
         "pq_train",

@@ -511,11 +511,11 @@ def _train_spherical_centroids(
     ann_cosine_topk_ivf and dedup_semantic train byte-identical
     quantizers (same corpus, same (k=16, iters=2, seed=42) params), so
     the centroids are held in the process memo
-    (``ops/pair_cache.py::memo``): the second consumer in a session
+    (``ops/artifacts.py::memo``): the second consumer in a session
     reuses them instead of re-running the sample + Lloyd jobs. Callers
     get their own copies of the centroid lists.
     """
-    from aws_etl_spark.ops.pair_cache import memo
+    from aws_etl_spark.ops.artifacts import memo
 
     cents = memo(
         "kmeans_train",

@@ -184,10 +184,10 @@ def _train_rounds(
 
     text_bpe_merges, text_bpe_vocab and text_bpe_encode each run the
     SAME merge training on the same corpus, so the result is held in
-    the process memo (``ops/pair_cache.py::memo``, keyed on session
+    the process memo (``ops/artifacts.py::memo``, keyed on session
     identity and the input fingerprint) and a repeat (corpus, params)
     in one session trains once."""
-    from aws_etl_spark.ops.pair_cache import memo
+    from aws_etl_spark.ops.artifacts import memo
 
     return memo(
         "bpe_train",

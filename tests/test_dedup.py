@@ -87,7 +87,7 @@ def test_dedup_exact_no_separator_ambiguity(spark):
 def test_minhash_plan_has_no_python_udf(spark, sf_dir, monkeypatch):
     # disable the pair cache: this pins the PIPELINE's plan, not a
     # parquet read-back of a memoized result
-    monkeypatch.setenv("SPARK_GRAFT_NO_PAIR_CACHE", "1")
+    monkeypatch.setenv("SPARK_GRAFT_NO_CACHE", "1")
     docs = load_table(spark, sf_dir, "documents")
     plan = minhash_near_dup_pairs(docs, "doc_id", "text")._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -102,7 +102,7 @@ def test_minhash_band_join_carries_no_shingles_measured(spark, sf_dir, monkeypat
     band self-join ×bands ×2 sides — an order of magnitude more."""
     # disable the pair cache so the measurement sees the pipeline,
     # not a parquet read-back of a memoized result
-    monkeypatch.setenv("SPARK_GRAFT_NO_PAIR_CACHE", "1")
+    monkeypatch.setenv("SPARK_GRAFT_NO_CACHE", "1")
     from aws_etl_spark.dedup.minhash import (
         minhash_near_dup_pairs,
         minhash_signatures,
@@ -459,21 +459,21 @@ def test_incremental_pairs_exclude_index_x_index(spark):
     assert not any(d == 27 for d, _ in got)
 
 
-# -- pair cache (ops/pair_cache.py, round 8) --------------------------------
+# -- pair cache (ops/artifacts.py disk tier, round 8) -----------------------
 
 
 def test_pair_cache_hit_is_bit_identical_to_direct(spark, sf_dir, monkeypatch):
     """A cached read-back must equal the uncached pipeline exactly
     (same rows, including the double jaccard bits), and a second call
     must actually hit the cache (same materialized file set)."""
-    import aws_etl_spark.ops.pair_cache as pc
+    import aws_etl_spark.ops.artifacts as pc
 
     docs = load_table(spark, sf_dir, "documents")
-    monkeypatch.setenv("SPARK_GRAFT_NO_PAIR_CACHE", "1")
+    monkeypatch.setenv("SPARK_GRAFT_NO_CACHE", "1")
     direct = sorted(
         map(tuple, minhash_near_dup_pairs(docs, "doc_id", "text").collect())
     )
-    monkeypatch.delenv("SPARK_GRAFT_NO_PAIR_CACHE")
+    monkeypatch.delenv("SPARK_GRAFT_NO_CACHE")
     first = sorted(
         map(tuple, minhash_near_dup_pairs(docs, "doc_id", "text").collect())
     )
@@ -518,7 +518,7 @@ def test_pair_cache_bypasses_inmemory_inputs(spark):
     share a cache entry. The fingerprint must refuse them (bypass),
     and the computed results must differ accordingly."""
     from aws_etl_spark.dedup.jaccard import ngram_jaccard_pairs
-    from aws_etl_spark.ops.pair_cache import _fingerprint
+    from aws_etl_spark.ops.artifacts import _fingerprint
 
     d1 = spark.createDataFrame(
         [(1, "a b c d e f"), (2, "a b c d e f")], ["doc_id", "text"]
@@ -547,7 +547,7 @@ def test_pair_cache_invalidates_inplace_single_file_rewrite(spark, tmp_path):
 
     import pandas as pd
 
-    from aws_etl_spark.ops.pair_cache import _fingerprint
+    from aws_etl_spark.ops.artifacts import _fingerprint
 
     p = str(tmp_path / "docs.parquet")
     pd.DataFrame({"doc_id": [1, 2], "text": ["a b c", "a b c"]}).to_parquet(p)
@@ -573,7 +573,7 @@ def test_pair_cache_stats_percent_encoded_paths(spark, tmp_path):
 
     import pandas as pd
 
-    from aws_etl_spark.ops.pair_cache import _fingerprint
+    from aws_etl_spark.ops.artifacts import _fingerprint
 
     d = tmp_path / "dir with space"
     d.mkdir()
@@ -594,16 +594,16 @@ def test_pair_cache_switch_governs_memo_and_materialized(
     spark, tmp_path, monkeypatch, flag, serves
 ):
     """One off switch for both process caches: only
-    SPARK_GRAFT_NO_PAIR_CACHE=1 disables; any other value (here 0)
+    SPARK_GRAFT_NO_CACHE=1 disables; any other value (here 0)
     leaves memo() and materialized() serving repeat calls."""
     import pandas as pd
 
-    import aws_etl_spark.ops.pair_cache as pc
+    import aws_etl_spark.ops.artifacts as pc
 
     p = str(tmp_path / "docs.parquet")
     pd.DataFrame({"doc_id": [1, 2], "text": ["a b", "c d"]}).to_parquet(p)
     df = spark.read.parquet(p)
-    monkeypatch.setenv("SPARK_GRAFT_NO_PAIR_CACHE", flag)
+    monkeypatch.setenv("SPARK_GRAFT_NO_CACHE", flag)
     assert pc.disabled() is not serves
 
     first = pc.memo("switch", df, {}, object)
@@ -622,13 +622,85 @@ def test_pair_cache_switch_governs_memo_and_materialized(
     assert len(builds) == (1 if serves else 2)
 
 
+def test_memo_rewritten_input_supersedes_entry(spark, tmp_path, monkeypatch):
+    """Rewriting a memoized kernel's input rebuilds it AND evicts the
+    previous result: the tag keeps exactly one live entry instead of
+    pinning one trained state per input generation."""
+    import pandas as pd
+
+    import aws_etl_spark.ops.artifacts as art
+
+    monkeypatch.delenv("SPARK_GRAFT_NO_CACHE", raising=False)
+    p = str(tmp_path / "docs.parquet")
+    pd.DataFrame({"doc_id": [1, 2], "text": ["a b", "c d"]}).to_parquet(p)
+    builds = []
+
+    def kernel():
+        df = spark.read.parquet(p)
+
+        def build():
+            builds.append(1)
+            return df.count()
+
+        return art.memo("supersede", df, {}, build)
+
+    assert kernel() == 2 and kernel() == 2
+    assert len(builds) == 1
+    pd.DataFrame({"doc_id": [1, 2, 3], "text": ["x", "y", "z"]}).to_parquet(p)
+    st = os.stat(p)
+    os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    assert kernel() == 3
+    assert len(builds) == 2
+    assert sum(1 for k in art._STORE if k[0] == "supersede") == 1
+    assert art.stats("supersede")["evictions"] == 1
+
+
+def test_memo_eviction_releases_jvm_objects(spark, tmp_path, monkeypatch):
+    """A superseded DataFrame-valued result lets go of its JVM object
+    at eviction: its py4j proxy sits in a reference cycle, so without
+    a collection it would stay bound in the gateway (with whatever
+    blocks or broadcasts its plan holds) until Python's cyclic
+    collector happens to run."""
+    import gc
+    import weakref
+
+    import pandas as pd
+
+    import aws_etl_spark.ops.artifacts as art
+
+    monkeypatch.delenv("SPARK_GRAFT_NO_CACHE", raising=False)
+    p = str(tmp_path / "docs.parquet")
+    pd.DataFrame({"doc_id": [1, 2], "text": ["a b", "c d"]}).to_parquet(p)
+
+    def kernel():
+        df = spark.read.parquet(p)
+
+        def build():
+            out = df.select("doc_id")
+            out._jdf.toString()  # a proxy method call closes the cycle
+            return out
+
+        return art.memo("release", df, {}, build)
+
+    proxy = weakref.ref(kernel()._jdf)
+    pd.DataFrame({"doc_id": [3], "text": ["x"]}).to_parquet(p)
+    st = os.stat(p)
+    os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    gc.disable()  # only the store may collect here
+    try:
+        kernel()
+        assert proxy() is None
+    finally:
+        gc.enable()
+
+
 @pytest.mark.parametrize("race", [False, True])
 def test_pair_cache_scratch_rename_failure(monkeypatch, race):
     """Scratch-URI lane: a failed rename with no artifact at the
     destination raises naming both paths and keeps the tmp output; a
     rename lost to a concurrent writer (destination now exists) drops
     the tmp dir and serves the winner. Fake FileSystem, no cluster."""
-    import aws_etl_spark.ops.pair_cache as pc
+    import aws_etl_spark.ops.artifacts as pc
 
     class FakeFS:
         def __init__(self):
@@ -667,7 +739,7 @@ def test_pair_cache_scratch_rename_failure(monkeypatch, race):
 
     fs = FakeFS()
     root = "fake://scratch/root"
-    monkeypatch.delenv("SPARK_GRAFT_NO_PAIR_CACHE", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_NO_CACHE", raising=False)
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH_URI", "fake://scratch")
     monkeypatch.setattr(pc, "_REMOTE_ROOT", root)
     monkeypatch.setattr(pc, "_fingerprint", lambda *a: "k")
@@ -689,7 +761,7 @@ def test_pair_cache_per_key_locks_are_independent():
     """Distinct cache keys get distinct build locks (an unrelated
     multi-second build must not serialize other keys); the same key
     returns the same lock object so same-key callers do wait."""
-    import aws_etl_spark.ops.pair_cache as pc
+    import aws_etl_spark.ops.artifacts as pc
 
     a1 = pc._key_lock("key-a")
     a2 = pc._key_lock("key-a")
@@ -700,3 +772,53 @@ def test_pair_cache_per_key_locks_are_independent():
     with a1:
         assert b.acquire(timeout=1)
         b.release()
+
+
+def test_artifact_store_concurrent_callers_build_once(monkeypatch):
+    """Many threads asking for a few keys: each key builds exactly once
+    and every call is counted as a hit or a miss (a lost update on the
+    store or its counters breaks one of the two)."""
+    import sys
+    import threading
+
+    import aws_etl_spark.ops.artifacts as art
+
+    monkeypatch.delenv("SPARK_GRAFT_NO_CACHE", raising=False)
+    builds: dict[int, int] = {}
+    guard = threading.Lock()
+
+    def build_for(k):
+        def build():
+            with guard:
+                builds[k] = builds.get(k, 0) + 1
+            return k
+
+        return build
+
+    wrong = []
+
+    def worker():
+        for i in range(200):
+            k = i % 4
+            if art.cached("stress", None, k, (), build_for(k)) != k:
+                wrong.append(k)
+
+    before = dict(art.stats("stress"))
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+        for k in range(4):
+            art._STORE.pop(("stress", None, k), None)
+    after = art.stats("stress")
+    assert not wrong
+    assert builds == {0: 1, 1: 1, 2: 1, 3: 1}
+    assert after["misses"] - before["misses"] == 4
+    assert after["hits"] - before["hits"] == 16 * 200 - 4

@@ -187,3 +187,45 @@ def test_snapshot_diff_classifies_all_change_types(spark, tmp_path):
         ("added", 4): (None, 40),
         ("updated", 5): (None, 50),
     }
+
+
+@pytest.mark.parametrize(
+    "change, builds", [("none", 1), ("rewrite_orders", 2), ("delete_root", 2)]
+)
+def test_lake_build_memo(spark, sf_dir, tmp_path, monkeypatch, change, builds):
+    """The scratch-lake builders are served from the artifact store
+    while orders.parquet and the built root are unchanged; a rewritten
+    orders.parquet or a deleted root rebuilds the table."""
+    import os
+    import shutil
+
+    import pandas as pd
+
+    from aws_etl_spark.queries import lakehouse_queries as lq
+
+    monkeypatch.delenv("SPARK_GRAFT_NO_CACHE", raising=False)
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    orders = sf / "orders.parquet"
+    shutil.copy(f"{sf_dir}/orders.parquet", orders)
+    calls = []
+    cold = lq._build_versioned_cold
+
+    def counted(spark_, sf_dir):
+        calls.append(sf_dir)
+        return cold(spark_, sf_dir)
+
+    monkeypatch.setattr(lq, "_build_versioned_cold", counted)
+    root = lq.build_versioned_table(spark, str(sf))
+    try:
+        if change == "rewrite_orders":
+            pd.read_parquet(orders).head(500).to_parquet(orders)
+            st = os.stat(orders)
+            os.utime(orders, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+        elif change == "delete_root":
+            shutil.rmtree(root)
+        again = lq.build_versioned_table(spark, str(sf))
+        assert again == root and root.is_dir()
+        assert len(calls) == builds
+    finally:
+        shutil.rmtree(root, ignore_errors=True)

@@ -241,7 +241,7 @@ def test_fuzzy_blocked_join_is_sort_merge_on_block_key(
     — never a CartesianProduct; the levenshtein predicate rides as a
     post-join filter. Cache bypassed so the PIPELINE plan is
     inspected, not a pair-cache parquet read-back."""
-    monkeypatch.setenv("SPARK_GRAFT_NO_PAIR_CACHE", "1")
+    monkeypatch.setenv("SPARK_GRAFT_NO_CACHE", "1")
     df = REGISTRY["join_fuzzy_blocked"].fn(spark, sf_dir)
     facts = plan_facts(df)
     assert all(j != "CartesianProduct" for j in facts.join_strategies), (
@@ -422,7 +422,7 @@ def test_triangle_wedge_join_is_equi(spark, sf_dir, monkeypatch):
 
     # disable the pair cache so the pin inspects the full edge-list
     # pipeline, not a parquet read-back of a memoized pair table
-    monkeypatch.setenv("SPARK_GRAFT_NO_PAIR_CACHE", "1")
+    monkeypatch.setenv("SPARK_GRAFT_NO_CACHE", "1")
     fn = REGISTRY["dedup_graph_triangles"].fn
     plan = formatted_plan(fn(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in plan
@@ -789,7 +789,7 @@ def test_rescan_family_single_scan_plans(spark, sf_dir):
 
     from aws_etl_spark.plans.inspect import executed_census
 
-    os.environ["SPARK_GRAFT_NO_PAIR_CACHE"] = "1"
+    os.environ["SPARK_GRAFT_NO_CACHE"] = "1"
     try:
         failures = []
         for name, (max_scans, max_shuf) in _RESCAN_FAMILY_BOUNDS.items():
@@ -807,7 +807,7 @@ def test_rescan_family_single_scan_plans(spark, sf_dir):
                 )
         assert not failures, "; ".join(failures)
     finally:
-        os.environ.pop("SPARK_GRAFT_NO_PAIR_CACHE", None)
+        os.environ.pop("SPARK_GRAFT_NO_CACHE", None)
 
 
 # Round-11 registry-wide rescan tripwire (the r10 judge's ask: the
@@ -885,7 +885,7 @@ def test_prefix_filter_checkpointed_shingles(spark, sf_dir):
 
     from aws_etl_spark.plans.inspect import executed_census
 
-    os.environ["SPARK_GRAFT_NO_PAIR_CACHE"] = "1"
+    os.environ["SPARK_GRAFT_NO_CACHE"] = "1"
     try:
         c = executed_census(
             REGISTRY["dedup_prefix_filter"].fn(spark, sf_dir),
@@ -894,4 +894,4 @@ def test_prefix_filter_checkpointed_shingles(spark, sf_dir):
         assert c.n_parquet_scans == 0, c.scans_per_table
         assert c.n_rdd_scans >= 3  # prefix ranking + both verify sides
     finally:
-        os.environ.pop("SPARK_GRAFT_NO_PAIR_CACHE", None)
+        os.environ.pop("SPARK_GRAFT_NO_CACHE", None)

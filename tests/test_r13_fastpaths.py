@@ -79,9 +79,9 @@ def test_shared_shingle_artifacts_match_uncached(spark, monkeypatch, name):
 
     _ensure_loaded()
     fn = REGISTRY[name].fn
-    monkeypatch.delenv("SPARK_GRAFT_NO_PAIR_CACHE", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_NO_CACHE", raising=False)
     cached = {tuple(r) for r in fn(spark, SF_SMOKE).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_NO_PAIR_CACHE", "1")
+    monkeypatch.setenv("SPARK_GRAFT_NO_CACHE", "1")
     uncached = {tuple(r) for r in fn(spark, SF_SMOKE).collect()}
     assert cached == uncached and cached
 
@@ -213,7 +213,7 @@ def test_bpe_driver_matches_distributed(spark, monkeypatch):
     left-to-right merge — on all three consumers (merges, vocab, and
     the final segmentation encode joins against)."""
     import aws_etl_spark.text.bpe as bpe
-    from aws_etl_spark.ops import pair_cache
+    from aws_etl_spark.ops import artifacts
 
     docs = spark.createDataFrame(
         [
@@ -226,7 +226,7 @@ def test_bpe_driver_matches_distributed(spark, monkeypatch):
     )
 
     def train():
-        pair_cache._MEMO.clear()
+        artifacts._STORE.clear()
         merges, vocab = bpe.bpe_train(docs, "text", n_rounds=3)
         seq = bpe.bpe_final_state(docs, "text", n_rounds=3)
         return (
@@ -247,7 +247,7 @@ def test_bpe_driver_dial_boundary(spark, monkeypatch):
     """cap == distinct-word count keeps the fast path; cap one below
     forces the distributed loop (the limit probe overflows)."""
     import aws_etl_spark.text.bpe as bpe
-    from aws_etl_spark.ops import lanes, pair_cache
+    from aws_etl_spark.ops import artifacts, lanes
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma alpha"), (2, "beta delta")],
@@ -256,7 +256,7 @@ def test_bpe_driver_dial_boundary(spark, monkeypatch):
     n_words = 4  # alpha beta gamma delta
 
     def train():
-        pair_cache._MEMO.clear()
+        artifacts._STORE.clear()
         merges, vocab = bpe.bpe_train(docs, "text", n_rounds=2)
         return (
             sorted(tuple(r) for r in merges.collect()),
@@ -335,17 +335,17 @@ def test_kmeans_train_driver_matches_distributed(spark, monkeypatch):
     cluster sums are partition-order dependent, so bit-equality was
     never pinned; both consumers are rows-only)."""
     import aws_etl_spark.similarity.topk as topk
-    from aws_etl_spark.ops import pair_cache
+    from aws_etl_spark.ops import artifacts
     from aws_etl_spark.queries.registry import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     monkeypatch.delenv("SPARK_GRAFT_LANE", raising=False)
-    pair_cache._MEMO.clear()
+    artifacts._STORE.clear()
     fast = topk._train_spherical_centroids(emb, "vec_id", "embedding", 16, 2, 42)
     monkeypatch.setenv("SPARK_GRAFT_LANE", "distributed")
-    pair_cache._MEMO.clear()
+    artifacts._STORE.clear()
     slow = topk._train_spherical_centroids(emb, "vec_id", "embedding", 16, 2, 42)
-    pair_cache._MEMO.clear()
+    artifacts._STORE.clear()
     assert [c for c, _ in fast] == [c for c, _ in slow]
     for (_, va), (_, vb) in zip(fast, slow):
         assert len(va) == len(vb)
@@ -358,20 +358,20 @@ def test_kmeans_train_driver_dial_boundary(spark, monkeypatch):
     distributed loop (the limit probe overflows) — same centroids to
     tolerance either way."""
     import aws_etl_spark.similarity.topk as topk
-    from aws_etl_spark.ops import lanes, pair_cache
+    from aws_etl_spark.ops import artifacts, lanes
     from aws_etl_spark.queries.registry import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     default_cap = lanes.CAPS["kmeans_train_rows"]
     monkeypatch.setitem(lanes.CAPS, "kmeans_train_rows", 1)
-    pair_cache._MEMO.clear()
+    artifacts._STORE.clear()
     forced_slow = topk._train_spherical_centroids(
         emb, "vec_id", "embedding", 8, 1, 7
     )
     monkeypatch.setitem(lanes.CAPS, "kmeans_train_rows", default_cap)
-    pair_cache._MEMO.clear()
+    artifacts._STORE.clear()
     fast = topk._train_spherical_centroids(emb, "vec_id", "embedding", 8, 1, 7)
-    pair_cache._MEMO.clear()
+    artifacts._STORE.clear()
     assert len(forced_slow) == len(fast) == 8
     for (_, va), (_, vb) in zip(fast, forced_slow):
         for x, y in zip(va, vb):
@@ -384,7 +384,7 @@ def test_pq_trainer_driver_matches_distributed(spark, monkeypatch):
     integer arithmetic throughout, so exact equality on codebooks,
     codes, and the downstream ADC/recall outputs."""
     import aws_etl_spark.similarity.pq as pq
-    from aws_etl_spark.ops import pair_cache
+    from aws_etl_spark.ops import artifacts
 
     emb = spark.createDataFrame(
         [(i, [float(i % 5) * 0.3 - 0.5, float(i % 3) * 0.4,
@@ -394,7 +394,7 @@ def test_pq_trainer_driver_matches_distributed(spark, monkeypatch):
     )
 
     def run():
-        pair_cache._MEMO.clear()
+        artifacts._STORE.clear()
         adc, _ = pq.pq_adc_topk(emb, m=2, k=4, n_iter=2, n_queries=3, topk=3)
         return sorted(tuple(r) for r in adc.collect())
 
@@ -402,7 +402,7 @@ def test_pq_trainer_driver_matches_distributed(spark, monkeypatch):
     fast = run()
     monkeypatch.setenv("SPARK_GRAFT_LANE", "distributed")
     slow = run()
-    pair_cache._MEMO.clear()
+    artifacts._STORE.clear()
     assert fast and fast == slow
 
 
@@ -410,7 +410,7 @@ def test_pq_trainer_dial_boundary(spark, monkeypatch):
     """cap == cell count keeps the fast path; one below forces the
     distributed loop (the gate is <=) — identical output either way."""
     import aws_etl_spark.similarity.pq as pq
-    from aws_etl_spark.ops import lanes, pair_cache
+    from aws_etl_spark.ops import artifacts, lanes
 
     emb = spark.createDataFrame(
         [(i, [float(i % 4) * 0.2, float(i % 6) * 0.15])
@@ -420,7 +420,7 @@ def test_pq_trainer_dial_boundary(spark, monkeypatch):
     cells = 12 * 2
 
     def run():
-        pair_cache._MEMO.clear()
+        artifacts._STORE.clear()
         adc, _ = pq.pq_adc_topk(emb, m=2, k=3, n_iter=1, n_queries=2, topk=2)
         return sorted(tuple(r) for r in adc.collect())
 
@@ -428,5 +428,5 @@ def test_pq_trainer_dial_boundary(spark, monkeypatch):
     at_cap = run()
     monkeypatch.setitem(lanes.CAPS, "pq_cells", cells - 1)
     below = run()
-    pair_cache._MEMO.clear()
+    artifacts._STORE.clear()
     assert at_cap == below

@@ -1,7 +1,7 @@
 """Round-14 optimization-round tests.
 
 Covers the r13-verdict infrastructure items:
-- the pair-cache scratch-URI dial (verdict item 3): artifacts
+- the artifact-store scratch-URI dial (verdict item 3): artifacts
   round-trip through a Hadoop-resolvable shared URI instead of the
   driver-local tmpdir, both on local[*] and on a real multi-process
   local-cluster;
@@ -25,10 +25,10 @@ def _reset_remote_root():
     """The remote scratch root is process-scoped module state; tests
     that flip the env var must reset it so each test gets its own
     root (a real process never flips the variable mid-run)."""
-    from aws_etl_spark.ops import pair_cache
+    from aws_etl_spark.ops import artifacts
 
-    pair_cache._REMOTE_ROOT = None
-    pair_cache._REMOTE_SPARK = None
+    artifacts._REMOTE_ROOT = None
+    artifacts._REMOTE_SPARK = None
 
 
 def test_scratch_uri_roundtrip_matches_uncached(spark, sf_dir, tmp_path,
@@ -40,7 +40,7 @@ def test_scratch_uri_roundtrip_matches_uncached(spark, sf_dir, tmp_path,
 
     uri_root = tmp_path / "scratch"
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH_URI", f"file://{uri_root}")
-    monkeypatch.delenv("SPARK_GRAFT_NO_PAIR_CACHE", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_NO_CACHE", raising=False)
     _reset_remote_root()
     try:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -55,7 +55,7 @@ def test_scratch_uri_roundtrip_matches_uncached(spark, sf_dir, tmp_path,
         again = sorted(
             map(tuple, minhash_near_dup_pairs(docs, "doc_id", "text").collect())
         )
-        monkeypatch.setenv("SPARK_GRAFT_NO_PAIR_CACHE", "1")
+        monkeypatch.setenv("SPARK_GRAFT_NO_CACHE", "1")
         ref = sorted(
             map(tuple, minhash_near_dup_pairs(docs, "doc_id", "text").collect())
         )
@@ -100,10 +100,10 @@ def test_min_df_prune_is_pair_preserving(spark, tmp_path, monkeypatch):
             ).collect())),
         )
 
-    monkeypatch.delenv("SPARK_GRAFT_NO_PAIR_CACHE", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_NO_CACHE", raising=False)
     monkeypatch.delenv("SPARK_GRAFT_SCRATCH_URI", raising=False)
     cached = all_three()
-    monkeypatch.setenv("SPARK_GRAFT_NO_PAIR_CACHE", "1")
+    monkeypatch.setenv("SPARK_GRAFT_NO_CACHE", "1")
     uncached = all_three()
     assert cached == uncached
     jac = cached[0]
@@ -115,7 +115,7 @@ def test_skew_probe_share_and_floor(spark, tmp_path, monkeypatch):
     """hot_key_share computes the hottest key's row share; the
     engagement floor keeps tiny (trivially share-skewed) corpora on
     the historical plan, and the module constants force both ends."""
-    from aws_etl_spark.ops import pair_cache, skew_probe
+    from aws_etl_spark.ops import artifacts, skew_probe
 
     rows = [(1, i) for i in range(8)] + [(2, 100), (3, 101)]
     src = str(tmp_path / "ev.parquet")
@@ -123,13 +123,15 @@ def test_skew_probe_share_and_floor(spark, tmp_path, monkeypatch):
         1
     ).write.parquet(src)
     df = spark.read.parquet(src)
-    monkeypatch.delenv("SPARK_GRAFT_NO_PAIR_CACHE", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_NO_CACHE", raising=False)
     share, tot = skew_probe.hot_key_share(df, "user_id")
     assert tot == 10 and abs(share - 0.8) < 1e-9
     # memoized: a second call must not launch a job — poke the memo
     sid = (spark.sparkContext.applicationId, id(df.sparkSession))
-    fp = pair_cache._fingerprint("hot_key_share:user_id", df, {})
-    assert pair_cache._MEMO[(sid, fp)] == (share, tot)
+    ident, _ = artifacts._input_key(df, {})
+    assert artifacts._STORE[("hot_key_share:user_id", sid, ident)][1] == (
+        share, tot,
+    )
     # default floors (64 MB input / 1M rows) keep the tiny 80%-skewed
     # frame un-chunked — and the byte floor decides WITHOUT a job
     assert skew_probe.pick_chunked(df, "user_id") is False
@@ -187,7 +189,7 @@ spark = (
 from aws_etl_spark.dedup.minhash import minhash_near_dup_pairs
 docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 cached = sorted(map(tuple, minhash_near_dup_pairs(docs, "doc_id", "text").collect()))
-os.environ["SPARK_GRAFT_NO_PAIR_CACHE"] = "1"
+os.environ["SPARK_GRAFT_NO_CACHE"] = "1"
 ref = sorted(map(tuple, minhash_near_dup_pairs(docs, "doc_id", "text").collect()))
 assert cached == ref, f"{len(cached)} cached vs {len(ref)} uncached rows"
 assert len(cached) > 0

@@ -11,11 +11,13 @@ import shutil
 
 import pandas as pd
 
+from aws_etl_spark.ops.artifacts import _STORE
 from aws_etl_spark.oracle import check_query
 from aws_etl_spark.queries.registry import (
     REGISTRY,
     _STAGE_CACHE_STATS,
     _ensure_loaded,
+    _staged_view,
 )
 
 _ensure_loaded()
@@ -70,18 +72,15 @@ def test_rewritten_input_misses_by_fingerprint(spark, tmp_path):
     assert sum(r.n_pairs for r in row) < 300
 
 
-def test_escape_hatch_bypasses_reuse(spark, tmp_path):
+def test_escape_hatch_bypasses_reuse(spark, tmp_path, monkeypatch):
     sf = _mk_sf(tmp_path)
-    os.environ["SPARK_GRAFT_NO_STAGE_CACHE"] = "1"
-    try:
-        h0, m0 = _STAGE_CACHE_STATS["hits"], _STAGE_CACHE_STATS["misses"]
-        assert check_query("events_acf_daily", spark, sf).ok
-        assert check_query("stat_durbin_watson", spark, sf).ok
-        assert (_STAGE_CACHE_STATS["hits"], _STAGE_CACHE_STATS["misses"]) == (
-            h0, m0,
-        )
-    finally:
-        os.environ.pop("SPARK_GRAFT_NO_STAGE_CACHE", None)
+    monkeypatch.setenv("SPARK_GRAFT_NO_CACHE", "1")
+    h0, m0 = _STAGE_CACHE_STATS["hits"], _STAGE_CACHE_STATS["misses"]
+    assert check_query("events_acf_daily", spark, sf).ok
+    assert check_query("stat_durbin_watson", spark, sf).ok
+    assert (_STAGE_CACHE_STATS["hits"], _STAGE_CACHE_STATS["misses"]) == (
+        h0, m0,
+    )
 
 
 def test_distinct_inputs_never_share(spark, tmp_path):
@@ -114,45 +113,34 @@ def test_lru_eviction_frees_blocks_and_restages(spark, tmp_path, monkeypatch):
     """Staging past the cap evicts the oldest entry AND unpersists its
     checkpointed blocks; the evicted text re-stages cleanly on the
     next request (a fresh checkpoint, not the dead one)."""
-    from aws_etl_spark.queries import registry
-    from aws_etl_spark.queries.registry import (
-        _STAGE_CACHE,
-        _STAGE_LATEST,
-        _staged_view,
-    )
-
+    from aws_etl_spark.ops import artifacts
     sf = _mk_sf(tmp_path)
-    monkeypatch.setattr(registry, "_STAGE_CACHE_CAP", 2)
+    monkeypatch.setattr(artifacts, "CAP", 2)
     try:
-        _STAGE_CACHE.clear()
-        _STAGE_LATEST.clear()
+        _STORE.clear()
         base = _persistent_rdds(spark)
         texts = [f"SELECT {i} AS x" for i in range(4)]
         for t in texts:
             _staged_view(spark, sf, ("events",), t)
-        assert len(_STAGE_CACHE) == 2  # capped
+        assert len(_STORE) == 2  # capped
         # 4 staged, 2 evicted-and-unpersisted -> only 2 block sets live
         assert _persistent_rdds(spark) == base + 2
         e0 = _STAGE_CACHE_STATS["evictions"]
         df = _staged_view(spark, sf, ("events",), texts[0])  # re-stage
         assert df.collect()[0].x == 0
         assert _STAGE_CACHE_STATS["evictions"] == e0 + 1  # texts[2] out
-        assert len(_STAGE_CACHE) == 2
+        assert len(_STORE) == 2
         assert _persistent_rdds(spark) == base + 2
     finally:
-        _STAGE_CACHE.clear()
-        _STAGE_LATEST.clear()
+        _STORE.clear()
 
 
 def test_superseded_snapshot_evicts_old_checkpoint(spark, tmp_path):
     """Re-staging the same text against a rewritten input does not
     just miss — it frees the stale snapshot's blocks immediately
     instead of pinning them for the process lifetime."""
-    from aws_etl_spark.queries.registry import _STAGE_CACHE, _STAGE_LATEST
-
     sf = _mk_sf(tmp_path, copy=("events",))
-    _STAGE_CACHE.clear()
-    _STAGE_LATEST.clear()
+    _STORE.clear()
     base = _persistent_rdds(spark)
     e0 = _STAGE_CACHE_STATS["evictions"]
     assert check_query("events_acf_daily", spark, sf).ok
@@ -164,23 +152,15 @@ def test_superseded_snapshot_evicts_old_checkpoint(spark, tmp_path):
     # same number of live block sets: the stale spine was unpersisted
     assert _persistent_rdds(spark) == after_first
     assert _STAGE_CACHE_STATS["evictions"] == e0 + 1
-    _STAGE_CACHE.clear()
-    _STAGE_LATEST.clear()
+    _STORE.clear()
 
 
 def test_upstream_chain_distinguishes_fingerprints(spark, tmp_path):
     """An identical downstream stage text built over two DIFFERENT
     upstream view definitions must not share a checkpoint (the r12
     ADVICE medium advisory: safety was conventional, now structural)."""
-    from aws_etl_spark.queries.registry import (
-        _STAGE_CACHE,
-        _STAGE_LATEST,
-        _staged_view,
-    )
-
     sf = _mk_sf(tmp_path)
-    _STAGE_CACHE.clear()
-    _STAGE_LATEST.clear()
+    _STORE.clear()
     spark.sql("SELECT 1 AS v").createOrReplaceTempView("up13")
     a = _staged_view(spark, sf, ("events",), "SELECT v FROM up13",
                      chain=(("up13", "SELECT 1 AS v"),))
@@ -189,9 +169,8 @@ def test_upstream_chain_distinguishes_fingerprints(spark, tmp_path):
                      chain=(("up13", "SELECT 2 AS v"),))
     assert a.collect()[0].v == 1
     assert b.collect()[0].v == 2  # NOT the stale checkpoint
-    assert len(_STAGE_CACHE) == 2
-    _STAGE_CACHE.clear()
-    _STAGE_LATEST.clear()
+    assert len(_STORE) == 2
+    _STORE.clear()
 
 
 def test_sibling_sessions_do_not_share(spark, tmp_path):
@@ -199,20 +178,33 @@ def test_sibling_sessions_do_not_share(spark, tmp_path):
     temp-view catalog: a cached stage DataFrame belongs to the session
     that created it (createOrReplaceTempView registers THERE), so the
     key must include session object identity."""
-    from aws_etl_spark.queries.registry import (
-        _STAGE_CACHE,
-        _STAGE_LATEST,
-        _staged_view,
-    )
-
     sf = _mk_sf(tmp_path)
-    _STAGE_CACHE.clear()
-    _STAGE_LATEST.clear()
+    _STORE.clear()
     m0 = _STAGE_CACHE_STATS["misses"]
     _staged_view(spark, sf, ("events",), "SELECT 42 AS x")
     sib = spark.newSession()
     df = _staged_view(sib, sf, ("events",), "SELECT 42 AS x")
     assert _STAGE_CACHE_STATS["misses"] == m0 + 2  # no cross-session hit
     assert df.sparkSession is sib
-    _STAGE_CACHE.clear()
-    _STAGE_LATEST.clear()
+    _STORE.clear()
+
+
+def test_unidentifiable_session_stores_nothing(spark, tmp_path):
+    """A session whose ``.sparkContext`` raises (Spark Connect) cannot
+    be keyed: the stage builds uncached and the store does not grow,
+    so no dead entry pushes live ones out."""
+
+    class ConnectLike:
+        sql = spark.sql
+
+        @property
+        def sparkContext(self):  # noqa: N802 — mirrors SparkSession
+            raise RuntimeError("no SparkContext on a Connect session")
+
+    sf = _mk_sf(tmp_path)
+    before = len(_STORE)
+    m0 = _STAGE_CACHE_STATS["misses"]
+    df = _staged_view(ConnectLike(), sf, ("events",), "SELECT 7 AS x")
+    assert df.collect()[0].x == 7
+    assert len(_STORE) == before
+    assert _STAGE_CACHE_STATS["misses"] == m0

@@ -2,13 +2,14 @@
 
 The dedup/graph family re-derived the same near-dup candidate-pair
 table in every query until round 8 shipped the process-scoped
-materialization in ``ops/pair_cache.py``. This script measures that
-decision: variant ``baseline`` runs the family with the cache
-DISABLED (``SPARK_GRAFT_NO_PAIR_CACHE=1`` — the pre-r8 behavior,
-every query re-derives), variant ``memo`` runs with the shipped cache
-active. Run each variant in its own process and compare the printed
-JSON lines (per-query row counts must match across variants; the
-original adoption measurement — 68.2 s baseline vs 39.0 s memo at
+materialization, now the disk tier of ``ops/artifacts.py``. This
+script measures that decision: variant ``baseline`` runs the family
+with the artifact store DISABLED (``SPARK_GRAFT_NO_CACHE=1`` — the
+pre-r8 behavior, every query re-derives; it also turns off the
+store's memory tier), variant ``memo`` runs with the store active.
+Run each variant in its own process and compare the printed JSON
+lines (per-query row counts must match across variants; the original
+adoption measurement — 68.2 s baseline vs 39.0 s memo at
 sf0.1 — is recorded in BASELINE.md).
 
 Usage:
@@ -50,9 +51,9 @@ FAMILY = [
 def main() -> None:
     variant = sys.argv[1] if len(sys.argv) > 1 else "baseline"
     if variant == "baseline":
-        # must happen BEFORE any query runs: the shipped pair cache
+        # must happen BEFORE any query runs: the artifact store
         # checks this env var per call
-        os.environ["SPARK_GRAFT_NO_PAIR_CACHE"] = "1"
+        os.environ["SPARK_GRAFT_NO_CACHE"] = "1"
     from aws_etl_spark.queries.registry import REGISTRY, _ensure_loaded
     from aws_etl_spark.session import get_session
 
